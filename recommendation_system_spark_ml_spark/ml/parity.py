@@ -7,7 +7,9 @@ elbow sweep (MLR.py:155-182), the cluster-average predictor
 rebuilt here on the harness star schema with zero driver-side data
 loops:
 
-- one-hot via distributed pivot (replaces MLR.py:123-126 collect);
+- one-hot as a map-only projection over the runtime vocabulary (one
+  <=|categories|-row collect, what pivot does internally; replaces the
+  MLR.py:123-126 collect of the whole table);
 - SSE via KMeansModel.summary.trainingCost (replaces the Python
   row-map at MLR.py:33-37,164);
 - elbow = lag-window first-difference + argmin (MLR.py:47-51,181-182),
@@ -15,13 +17,16 @@ loops:
   can never win (MLR.py:49);
 - train/test split via the Knuth-hash recipe (oracle-reproducible,
   replacing nondeterministic randomSplit at MLR.py:145);
-- ALS CV with parallelism=4 (the reference's sequential CV is the
+- ALS CV with parallelism=8 (the reference's sequential CV is the
   documented 2h20m bottleneck, BASELINE.md).
 
 Scale notes: the ratings-analog (o_custkey x l_partkey, l_quantity) is
 fact-table-sized; everything reaching KMeans/ALS stays JVM-side
 (array_to_vector, MLlib). Driver-side materialization only for
-provably-tiny results: the (k, SSE) sweep table and CV grid.
+provably-tiny results: the (k, SSE) sweep table, the CV grid, the
+one-hot vocabulary and the per-split RMSE rows; tiny driver-built
+frames go back through session.tiny_frame, so no ML query starts
+Python workers.
 """
 
 from __future__ import annotations
@@ -37,7 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from recommendation_system_spark_ml_spark.registry import register
-from recommendation_system_spark_ml_spark.session import pin_session_conf
+from recommendation_system_spark_ml_spark.session import (
+    pin_session_conf, tiny_frame)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 SEED = 823  # the reference's seed (MLR.py:30, 145, 208)
@@ -89,13 +95,15 @@ def kmeans_sweep(feats: DataFrame, ks=range(2, 11)) -> list[tuple[int, float]]:
     def fit(k: int) -> tuple[int, float]:
         return k, float(KMeans(k=k, seed=SEED).fit(feats).summary.trainingCost)
 
-    # all fits in flight at once (r11: 8 workers left the 9th k as a
-    # sequential straggler after the first 8 finished); each fit is
-    # itself a multi-job chain with idle gaps the scheduler fills from
-    # the other fits. Purely scheduling -- seeded fits are
-    # layout-pinned by the caller, so concurrency cannot change SSE.
+    # up to 16 fits in flight at once -- all nine of the reference's ks
+    # (8 workers left the 9th k as a sequential straggler after the
+    # first 8 finished) while a wide sweep cannot oversubscribe the
+    # scheduler with one thread per k; each fit is itself a multi-job
+    # chain with idle gaps the scheduler fills from the other fits.
+    # Purely scheduling -- seeded fits are layout-pinned by the caller,
+    # so concurrency cannot change SSE.
     ks = list(ks)
-    with ThreadPoolExecutor(max_workers=max(1, len(ks))) as pool:
+    with ThreadPoolExecutor(max_workers=max(1, min(len(ks), 16))) as pool:
         return sorted(pool.map(fit, ks))
 
 
@@ -154,14 +162,31 @@ def ratings_analog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def onehot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-hot the p_type 'genre': runtime-discovered vocabulary via a
-    distributed pivot -- the DataFrame-native replacement for the
-    reference's collect-to-pandas one-hot (MLR.py:117-126)."""
+def onehot_parts(spark: SparkSession, sf_dir: str,
+                 keep_type: bool = False) -> DataFrame:
+    """One-hot the p_type 'genre' over a runtime-discovered vocabulary --
+    the DataFrame-native replacement for the reference's
+    collect-to-pandas one-hot (MLR.py:117-126).
+
+    What `groupBy(p_partkey).pivot(p_type)` does internally, without
+    its shuffles: one <=|types|-row collect of the distinct values,
+    sorted ascending with NULL first (pivot's column order), then one
+    map-only projection with an int 0/1 column per value, named like
+    pivot names it (a NULL type gets the column 'null', every other
+    cell of its row is 0). A consumer that re-executes the frame -- a
+    KMeans fit, its transform -- re-runs only a part scan, never two
+    exchanges. Rows are the part rows, so this equals the pivot
+    whenever p_partkey is a key (the oracle's shape either way).
+    `keep_type` carries p_type along for callers that need the label
+    next to its encoding."""
     part = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    return (part.groupBy("p_partkey").pivot("p_type")
-            .agg(F.coalesce(F.first(F.lit(1)), F.lit(0)))
-            .na.fill(0))
+    # Python's code-point order is Spark's UTF8_BINARY string order
+    vocab = sorted((r[0] for r in part.select("p_type").distinct().collect()),
+                   key=lambda v: (v is not None, v))
+    return part.select(
+        "p_partkey", *(["p_type"] if keep_type else []),
+        *[F.col("p_type").eqNullSafe(v).cast("int")
+          .alias("null" if v is None else v) for v in vocab])
 
 
 @register("ml_onehot", oracle="""
@@ -195,7 +220,7 @@ def elbow_frame(spark: SparkSession, rows: list[tuple[int, float]]) -> DataFrame
     (tests/test_golden_log.py), which feeds the reference's OWN
     published SSE table through this code and expects its published
     pick (k=3) back."""
-    sweep = spark.createDataFrame(rows, "k int, sse double")
+    sweep = tiny_frame(spark, rows, "k int, sse double")
     w = Window.orderBy("k")
     diffed = sweep.withColumn(
         "sse_diff", F.coalesce(F.col("sse") - F.lag("sse").over(w), F.lit(0.0)))
@@ -323,8 +348,8 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("embedding").isNotNull())
          .select("vec_id", F.col("embedding").cast("array<double>")
                  .alias("x")))
-    ks = spark.createDataFrame([(k,) for k in range(ELBOW_KMIN,
-                                                    ELBOW_KMAX + 1)], "k int")
+    ks = tiny_frame(spark, [(k,) for k in range(ELBOW_KMIN, ELBOW_KMAX + 1)],
+                    "k int")
     cent = (v.crossJoin(F.broadcast(ks))
             .where(F.col("vec_id") < F.col("k"))
             .select("k", F.col("vec_id").alias("cid"), F.col("x").alias("c")))
@@ -374,30 +399,34 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cluster_predictor_frames(spark: SparkSession, sf_dir: str):
     """The production M7 pipeline, both faces: one-hot p_type ->
     VectorAssembler -> KMeans(k=6, seed) -> per-(user, cluster) train
-    averages -> per-split RMSE (the `cluster` frame), plus the same
-    downstream algebra over the raw p_type partition (the `typed`
-    frame). Returns (cluster_rmse_df, typed_rmse_df, refine_df) where
-    refine_df has one row asserting every p_type maps to exactly one
-    cluster. Shared by the registered contract and the local parity
-    test that pins cluster_rmse == typed_rmse on this corpus."""
-    onehot = onehot_parts(spark, sf_dir)
-    genre_cols = [c for c in onehot.columns if c != "p_partkey"]
+    averages -> per-split RMSE, plus the same algebra over the raw
+    p_type partition. Returns (scores, clusters_refine_types,
+    partition_bijective): `scores` is one Row per split holding the
+    typed face (rmse, n) next to the cluster face (c_rmse, c_n);
+    refine is each p_type -> exactly one cluster, bijective adds
+    |clusters| == |types|. Shared by the registered contract and the
+    local parity test that pins c_rmse == rmse on this corpus.
+
+    Passes: KMeans fits and transforms the map-only one-hot (a part
+    scan, p_type carried through, no re-join of part). Scoring is ONE
+    query: `rated` is hash-partitioned on userId into
+    defaultParallelism partitions (an explicit count -- a bare
+    repartition lets AQE coalesce it to one partition), both train
+    averages are windows over that partitioning (no further exchange),
+    and both RMSEs, both counts and the distinct (p_type, cluster)
+    pairs of the rated rows come out of one groupBy(split) collected
+    to the driver (<= 2 rows of <= |types| x k pairs). With a single
+    consumer `rated` is never materialized, so no storage outlives
+    the call."""
+    onehot = onehot_parts(spark, sf_dir, keep_type=True)
+    genre_cols = [c for c in onehot.columns if c not in ("p_partkey", "p_type")]
     feats = VectorAssembler(inputCols=genre_cols,
                             outputCol="features").transform(onehot)
     model = KMeans(k=6, seed=SEED).fit(feats)
-    part = (load(spark, sf_dir, "part")
-            .where(F.col("p_type").isNotNull())
-            .select("p_partkey", "p_type"))
-    # r11 (guide §5): clusters feeds rated + both refine counts (the
-    # KMeans transform + pivot chain re-ran per consumer); rated feeds
-    # FOUR passes (train-averages and scoring join, for each of the
-    # cluster and p_type partitions). One eager materialization each:
-    # clusters is catalog-sized, rated is bounded by the (customer,
-    # part) pair table.
     clusters = (model.transform(feats)
-                .select("p_partkey", F.col("prediction").alias("cluster"))
-                .join(F.broadcast(part), "p_partkey")
-                .localCheckpoint(eager=True))
+                .where(F.col("p_type").isNotNull())
+                .select("p_partkey", F.col("prediction").alias("cluster"),
+                        "p_type"))
 
     ratings = (ratings_analog(spark, sf_dir)
                .where(F.col("userId").isNotNull()
@@ -408,34 +437,39 @@ def cluster_predictor_frames(spark: SparkSession, sf_dir: str):
                      ratings.movieId == clusters.p_partkey)
         .select("userId", "movieId", "cluster", "p_type", "rating"),
         F.col("userId").cast("bigint") * 4096 + F.col("movieId")
-    ).localCheckpoint(eager=True)
+    ).repartition(spark.sparkContext.defaultParallelism, "userId")
 
-    def rmse_by_split(group_col: str) -> DataFrame:
-        pred = (rated.filter(F.col("split") == "train")
-                .groupBy("userId", group_col)
-                .agg(F.avg("rating").alias("prediction")))
-        scored = rated.join(pred, on=["userId", group_col])
-        return (scored.groupBy("split")
-                .agg(F.round(F.sqrt(F.avg(F.pow(
-                    F.col("rating") - F.col("prediction"), F.lit(2)))), 4)
-                    .alias("rmse"),
-                     F.count(F.lit(1)).cast("long").alias("n")))
+    def train_avg(group_col: str):
+        # the inner-join predictor: NULL (row not scored) when the
+        # (user, group) has no train row
+        return F.avg(F.when(F.col("split") == "train", F.col("rating"))).over(
+            Window.partitionBy("userId", group_col))
 
+    def rmse(pred: str):
+        return F.round(F.sqrt(F.avg(F.pow(F.col("rating") - F.col(pred),
+                                          F.lit(2)))), 4)
+
+    rows = (rated.select("split", "rating", "p_type", "cluster",
+                         train_avg("p_type").alias("t_pred"),
+                         train_avg("cluster").alias("c_pred"))
+            .groupBy("split")
+            .agg(rmse("t_pred").alias("rmse"),
+                 F.count("t_pred").cast("long").alias("n"),
+                 rmse("c_pred").alias("c_rmse"),
+                 F.count("c_pred").cast("long").alias("c_n"),
+                 F.collect_set(F.struct("p_type", "cluster")).alias("pairs"))
+            .collect())
     # Two independent checks (r9 ADVICE): refine (each p_type -> <=1
     # cluster) is true by construction, so ALSO count both partitions
     # -- refine AND |clusters| == |types| iff the partitions are
     # bijective, which is exactly when cluster-RMSE == typed-RMSE.
-    refine = (clusters.groupBy("p_type")
-              .agg(F.countDistinct("cluster").alias("nc"))
-              .agg((F.max("nc") <= 1).alias("refines"),
-                   F.countDistinct("p_type").alias("n_types"))
-              .crossJoin(F.broadcast(
-                  clusters.agg(F.countDistinct("cluster").alias("n_cl"))))
-              .select(
-                  F.col("refines").alias("clusters_refine_types"),
-                  (F.col("refines") & (F.col("n_cl") == F.col("n_types")))
-                  .alias("partition_bijective")))
-    return rmse_by_split("cluster"), rmse_by_split("p_type"), refine
+    pairs = {(p.p_type, p.cluster) for r in rows for p in r.pairs}
+    n_types = len({t for t, _ in pairs})
+    refines = len(pairs) == n_types
+    bijective = refines and len({c for _, c in pairs}) == n_types
+    # a split none of whose rows is scored has no row (the inner join)
+    scores = sorted((r for r in rows if r.n > 0), key=lambda r: r.split)
+    return scores, refines, bijective
 
 
 @register("ml_cluster_predictor", oracle=f"""
@@ -488,23 +522,19 @@ def ml_cluster_predictor(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract therefore also hashes `partition_bijective` (refine AND
     |clusters| == |types| -- bijective iff the two partitions induce
     the same grouping) and `cluster_rmse_matches` (the actual
-    cluster-pipeline RMSE/N joined back per split and compared to the
-    hashed typed values) -- both flip FALSE and hash-mismatch the
-    moment the fit merges types."""
+    cluster-pipeline RMSE/N compared per split to the hashed typed
+    values) -- both flip FALSE and hash-mismatch the moment the fit
+    merges types. Both faces come out of one scoring pass and the
+    result rows are built on the JVM (session.tiny_frame)."""
     pin_session_conf(spark)
-    cluster_rmse, typed_rmse, refine = cluster_predictor_frames(
-        spark, sf_dir)
-    c = cluster_rmse.select("split",
-                            F.col("rmse").alias("c_rmse"),
-                            F.col("n").alias("c_n"))
-    return (typed_rmse.join(F.broadcast(c), "split")
-            .crossJoin(F.broadcast(refine))
-            .select("split", "rmse", "n", "clusters_refine_types",
-                    "partition_bijective",
-                    ((F.col("rmse") == F.col("c_rmse"))
-                     & (F.col("n") == F.col("c_n")))
-                    .alias("cluster_rmse_matches"))
-            .orderBy("split"))
+    scores, refines, bijective = cluster_predictor_frames(spark, sf_dir)
+    return tiny_frame(
+        spark,
+        [(r.split, r.rmse, r.n, refines, bijective,
+          r.rmse == r.c_rmse and r.n == r.c_n) for r in scores],
+        "split string, rmse double, n bigint, clusters_refine_types "
+        "boolean, partition_bijective boolean, cluster_rmse_matches "
+        "boolean")
 
 
 def _cv_fit_with_retry(cv, train, attempts: int = 3):
@@ -602,8 +632,8 @@ def ml_als_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, best = als_cv_detail(spark, sf_dir)
     in_band = all(math.isfinite(m) and 0 < m < 50 for _, _, m in rows)
     attains = best[2] == min(m for _, _, m in rows)
-    grid_df = spark.createDataFrame(
-        [(r, p) for r, p, _ in rows], "rank int, reg_param double")
+    grid_df = tiny_frame(
+        spark, [(r, p) for r, p, _ in rows], "rank int, reg_param double")
     n_train = (_hash_split(
         ratings_analog(spark, sf_dir)
         .where(F.col("userId").isNotNull() & F.col("movieId").isNotNull()
@@ -700,8 +730,9 @@ def ml_als_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, (pm, m) in enumerate(zip(grid, cv_model.avgMetrics))]
     best_idx = best_by_min_rmse(rows, 4)[0]
     min_rmse = min(r[4] for r in rows)
-    out = spark.createDataFrame(
-        rows, "grid_idx int, rank int, max_iter int, reg_param double, avg_rmse double")
+    out = tiny_frame(
+        spark, rows,
+        "grid_idx int, rank int, max_iter int, reg_param double, avg_rmse double")
     return (out.withColumn("is_best", (F.col("grid_idx") == best_idx).cast("int"))
             .select("grid_idx", "rank", "max_iter", "reg_param", "is_best",
                     ((F.col("avg_rmse") > 0) & (F.col("avg_rmse") < 100))
@@ -828,15 +859,25 @@ def ml_movielens_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("kmeans_test_rmse", round(test_rmse, 4)),
         ("als_test_rmse", round(als_rmse, 4)),
     ]
-    return spark.createDataFrame(report, "metric string, value double")
+    return tiny_frame(spark, report, "metric string, value double")
 
 
 def als_rmse_detail(spark: SparkSession, sf_dir: str):
     """The production M8+M11+M12 fit: seeded ALS on the Knuth 70/30
     train split, test RMSE computed both ways (RegressionEvaluator
-    and the plain A4 aggregate). Returns (rmse_evaluator, rmse_agg,
-    n_test) as Python scalars; shared by the registered contract and
-    the local band test that pins the actual RMSE value."""
+    and the plain A4 aggregate), plus the train-user-mean baseline.
+    Returns (rmse_evaluator, rmse_agg, n_test, baseline_user_rmse) as
+    Python scalars; shared by the registered contract and the local
+    band test that pins the actual RMSE value.
+
+    One pass: the train user means are joined onto the cold-start-
+    dropped predictions (every surviving user has a train factor,
+    hence a train mean) and that frame is cached once; the evaluator
+    reads it once and one aggregate takes rmse_agg, n_test and the
+    baseline from it. ALS blocks are sized to the session
+    (numUserBlocks = numItemBlocks = defaultParallelism, MLlib's old
+    RDD-API rule): the default 10x10 grid ran 210 tasks per
+    iteration job on 3 cores."""
     rated = _hash_split(
         ratings_analog(spark, sf_dir)
         .where(F.col("userId").isNotNull() & F.col("movieId").isNotNull()
@@ -844,21 +885,26 @@ def als_rmse_detail(spark: SparkSession, sf_dir: str):
         F.col("userId").cast("bigint") * 4096 + F.col("movieId"))
     train = rated.filter(F.col("split") == "train").drop("split")
     test = rated.filter(F.col("split") == "test").drop("split")
+    blocks = spark.sparkContext.defaultParallelism
     als = ALS(rank=12, maxIter=10, regParam=0.05,
               userCol="userId", itemCol="movieId", ratingCol="rating",
-              coldStartStrategy="drop", seed=SEED)
+              coldStartStrategy="drop", seed=SEED,
+              numUserBlocks=blocks, numItemBlocks=blocks)
     model = als.fit(train)
-    preds = model.transform(test).cache()
+    um = train.groupBy("userId").agg(F.avg("rating").alias("pu"))
+    preds = model.transform(test).join(um, "userId").cache()
     evaluator = RegressionEvaluator(metricName="rmse", labelCol="rating",
                                     predictionCol="prediction")
     rmse_eval = float(evaluator.evaluate(preds))
     agg = preds.agg(
         F.sqrt(F.avg(F.pow(F.col("rating") - F.col("prediction"), F.lit(2))))
-        .alias("rmse_agg"), F.count(F.lit(1)).alias("n_test")).first()
+        .alias("rmse_agg"), F.count(F.lit(1)).alias("n_test"),
+        F.round(F.sqrt(F.avg(F.pow(F.col("rating") - F.col("pu"), F.lit(2)))),
+                4).alias("baseline")).first()
     preds.unpersist()
     n = int(agg.n_test)
     rmse_agg = float(agg.rmse_agg) if agg.rmse_agg is not None else float("nan")
-    return rmse_eval, rmse_agg, n, train
+    return rmse_eval, rmse_agg, n, agg.baseline
 
 
 @register("ml_als_rmse", oracle=f"""
@@ -883,44 +929,29 @@ def ml_als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8+M11+M12 as a HASHABLE contract (r8 verdict task 5): the
     production seeded ALS fit runs in full (als_rmse_detail), and the
     hash verifies everything around it that IS relational algebra --
-    `n_test_scored` pins MLlib's coldStartStrategy='drop' semantics
-    exactly (a prediction is NaN-dropped iff the test user or item has
-    no train factor, i.e. the SQL anti-cold-start filter), and
-    `baseline_user_rmse` hashes the Knuth split + train-user-mean
-    predictor + RMSE aggregate end-to-end -- the yardstick the ALS
-    number is read against in the local band test. The two booleans
-    are guaranteed by construction: the evaluator and the plain A4
-    aggregate compute the same formula over the same predictions
-    (agree to 1e-6, or both empty), and a cold-start-dropped
-    prediction frame contains no NaN so its RMSE is finite whenever
-    any row survives. The ALS RMSE itself (MLlib-internal, seeded)
+    `n_test_scored` is the row count of MLlib's own
+    coldStartStrategy='drop' output, hashed against the oracle's SQL
+    anti-cold-start filter (a prediction is NaN-dropped iff the test
+    user or item has no train factor), and `baseline_user_rmse`, taken
+    over those same surviving rows, hashes the Knuth split +
+    train-user-mean predictor + RMSE aggregate end-to-end -- the
+    yardstick the ALS number is read against in the local band test.
+    The two booleans are guaranteed by construction: the evaluator and
+    the plain A4 aggregate compute the same formula over the same
+    predictions (agree to 1e-6, or both empty), and a cold-start-
+    dropped prediction frame contains no NaN so its RMSE is finite
+    whenever any row survives. The ALS RMSE itself (MLlib-internal, seeded)
     stays outside the hashed region, band-pinned in
     tests/test_ml_parity.py."""
     pin_session_conf(spark)
-    rmse_eval, rmse_agg, n_test, train = als_rmse_detail(spark, sf_dir)
     import math
+    rmse_eval, rmse_agg, n_test, baseline = als_rmse_detail(spark, sf_dir)
     agree = (n_test == 0) or (abs(rmse_eval - rmse_agg) <= 1e-6)
     finite = (n_test == 0) or math.isfinite(rmse_eval)
-
-    rated = _hash_split(
-        ratings_analog(spark, sf_dir)
-        .where(F.col("userId").isNotNull() & F.col("movieId").isNotNull()
-               & F.col("rating").isNotNull()),
-        F.col("userId").cast("bigint") * 4096 + F.col("movieId"))
-    tr = rated.filter(F.col("split") == "train")
-    te = rated.filter(F.col("split") == "test").select(
-        "userId", "movieId", "rating")
-    scored = (te.join(tr.select("userId").distinct(), "userId", "semi")
-              .join(tr.select("movieId").distinct(), "movieId", "semi"))
-    um = tr.groupBy("userId").agg(F.avg("rating").alias("pu"))
-    return (scored.join(um, "userId")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_test_scored"),
-                 F.round(F.sqrt(F.avg(F.pow(
-                     F.col("rating") - F.col("pu"), F.lit(2)))), 4)
-                 .alias("baseline_user_rmse"))
-            .select("n_test_scored", "baseline_user_rmse",
-                    F.lit(agree).alias("evaluator_agrees_aggregate"),
-                    F.lit(finite).alias("als_rmse_finite")))
+    return tiny_frame(
+        spark, [(n_test, baseline, agree, finite)],
+        "n_test_scored bigint, baseline_user_rmse double, "
+        "evaluator_agrees_aggregate boolean, als_rmse_finite boolean")
 
 
 @register("ml_minmax_parity", oracle="""

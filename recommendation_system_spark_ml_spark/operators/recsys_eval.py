@@ -583,8 +583,11 @@ def ml_rec_eval_als_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-joined out and the list re-cut to {EVAL_K} by the shared
     WindowGroupLimit rule. Factor values are MLlib internals; the
     evaluation arithmetic downstream of them is the hash-verified
-    shared code. The registered contract ml_rec_eval_als executes
-    this in full and hashes its SQL-expressible pins."""
+    shared code. This entry point and the registered contract
+    ml_rec_eval_als share the fit + recommend + metrics body
+    (_als_eval_over) and differ only in how the pool is
+    materialized: here it stays lazy, while ml_rec_eval_als
+    checkpoints it once and also hashes its SQL-expressible pins."""
     pin_session_conf(spark)
     ratings = _base_ratings(spark, sf_dir)
     train, test, test_users = _split_ratings(ratings)

@@ -88,6 +88,29 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def tiny_frame(spark: SparkSession, rows, schema: str):
+    """A driver-built frame of a few rows, built on the JVM side.
+
+    ``spark.createDataFrame(<list>)`` plans a scan of a Python RDD, and
+    executing it forks ``pyspark.daemon`` plus one Python worker per
+    task (~60 MB each) just to unpickle a handful of rows. Here every
+    value is a literal of an ``inline(array(struct(...)))`` over a
+    one-row, one-partition ``range``, so the plan never leaves the JVM.
+    ``schema`` is a DDL string; each value is cast to its field's type
+    and rows keep their order."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    fields = StructType.fromDDL(schema).fields
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                   for v, f in zip(row, fields)])
+        for row in rows])))
+
+
 def scratch_path(sf_dir: str, name: str) -> str:
     """Per-process scratch directory for round-trip queries.
 

@@ -4,7 +4,7 @@ star schema must behave like a recommender, not just run."""
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_df_matches, oracle_df
 from recommendation_system_spark_ml_spark.ml.parity import (
     ml_als_rmse, ml_cluster_predictor, ml_kmeans_elbow, ratings_analog)
 
@@ -26,8 +26,19 @@ def test_kmeans_elbow_table_shape_and_monotone_sse(spark):
     assert len(best) == 1 and best[0] != 2
 
 
+def _assert_built_on_jvm(df):
+    """Driver-computed result rows go through session.tiny_frame: a
+    `spark.createDataFrame(<list>)` result would plan an ExistingRDD
+    scan of a Python RDD, whose execution forks pyspark.daemon and
+    Python workers."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_cluster_predictor_rmse_sane(spark):
-    rows = {r.split: r for r in ml_cluster_predictor(spark, SF_SMOKE).collect()}
+    df = ml_cluster_predictor(spark, SF_SMOKE)
+    _assert_built_on_jvm(df)
+    rows = {r.split: r for r in df.collect()}
     assert set(rows) == {"train", "test"}
     for r in rows.values():
         assert 0.0 < r.rmse < 50.0  # ratings are avg quantities (1..50)
@@ -50,32 +61,126 @@ def test_cluster_predictor_kmeans_partition_equals_type_partition(spark):
     from recommendation_system_spark_ml_spark.ml.parity import (
         cluster_predictor_frames)
 
-    cluster_rmse, typed_rmse, refine = cluster_predictor_frames(
-        spark, SF_SMOKE)
-    c = {r.split: r for r in cluster_rmse.collect()}
-    t = {r.split: r for r in typed_rmse.collect()}
-    assert set(c) == set(t) == {"train", "test"}
-    for split in c:
-        assert c[split].n == t[split].n
-        assert c[split].rmse == pytest.approx(t[split].rmse, abs=1e-9)
-    assert refine.first().clusters_refine_types
+    scores, refines, bijective = cluster_predictor_frames(spark, SF_SMOKE)
+    assert [r.split for r in scores] == ["test", "train"]
+    for r in scores:
+        assert r.c_n == r.n > 0
+        assert r.c_rmse == pytest.approx(r.rmse, abs=1e-9)
+    assert refines and bijective
 
 
-def test_als_rmse_two_ways_agree(spark):
+def test_als_rmse_two_ways_agree(spark, duck):
     """Band-pins the actual ALS RMSE (the value outside the hashed
     region) and the evaluator-vs-aggregate agreement the contract
-    boolean summarizes."""
+    boolean summarizes; the count of MLlib's cold-start-dropped
+    predictions must equal an independent DuckDB count of the SQL
+    semi-join (test rows whose user AND item are both in train)."""
     from recommendation_system_spark_ml_spark.ml.parity import (
-        als_rmse_detail)
+        _RATINGS70_SQL, _SPLIT70_SQL, als_rmse_detail)
 
-    rmse_eval, rmse_agg, n_test, _train = als_rmse_detail(spark, SF_SMOKE)
+    rmse_eval, rmse_agg, n_test, baseline = als_rmse_detail(spark, SF_SMOKE)
     assert n_test > 0
     assert rmse_eval == pytest.approx(rmse_agg, abs=1e-3)
     assert 0.0 < rmse_eval < 50.0
-    row = ml_als_rmse(spark, SF_SMOKE).first()
-    assert row.n_test_scored == n_test  # cold-start drop == SQL filter
+    assert 0.0 < baseline < 50.0
+    n_semi = oracle_df(duck, f"""
+        WITH s AS (SELECT u, i, {_SPLIT70_SQL} AS split
+                   FROM ({_RATINGS70_SQL}))
+        SELECT count(*) AS n FROM s t
+        WHERE t.split = 'test'
+          AND EXISTS (SELECT 1 FROM s a WHERE a.split = 'train' AND a.u = t.u)
+          AND EXISTS (SELECT 1 FROM s b WHERE b.split = 'train' AND b.i = t.i)
+    """, SF_SMOKE)["n"][0]
+    assert n_test == n_semi  # cold-start drop == SQL semi-join
+    df = ml_als_rmse(spark, SF_SMOKE)
+    _assert_built_on_jvm(df)
+    row = df.first()
+    assert row.n_test_scored == n_test
+    assert row.baseline_user_rmse == baseline
     assert row.evaluator_agrees_aggregate and row.als_rmse_finite
-    assert 0.0 < row.baseline_user_rmse < 50.0
+
+
+
+def test_tiny_frame_types_order_and_empty(spark):
+    from recommendation_system_spark_ml_spark.session import tiny_frame
+
+    df = tiny_frame(spark, [(3, None, "b", True), (1, 2.5, None, False)],
+                    "k int, v double, s string, f boolean")
+    assert df.dtypes == [("k", "int"), ("v", "double"), ("s", "string"),
+                         ("f", "boolean")]
+    assert [tuple(r) for r in df.collect()] == [(3, None, "b", True),
+                                                (1, 2.5, None, False)]
+    empty = tiny_frame(spark, [], "k int, v double")
+    assert empty.dtypes == [("k", "int"), ("v", "double")]
+    assert empty.count() == 0
+
+
+def test_onehot_projection_equals_pivot(spark, duck, tmp_path):
+    """onehot_parts is a map-only projection over a collected
+    vocabulary; on a key-unique part table it must equal the
+    groupBy(p_partkey).pivot(p_type) expression it replaced: same
+    columns in the same order (NULL's 'null' column first), same 0/1
+    values with the pivot's 0-fill. ml_onehot still matches its
+    oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from recommendation_system_spark_ml_spark.ml.parity import onehot_parts
+    from recommendation_system_spark_ml_spark.registry import all_specs
+
+    pq.write_table(pa.table({
+        "p_partkey": pa.array([5, 1, 4, 2, 3, 6], pa.int64()),
+        "p_type": pa.array(["SMALL", "LARGE", None, "ECONOMY", "LARGE",
+                            "small"], pa.string())}),
+        str(tmp_path / "part.parquet"))
+    new = onehot_parts(spark, str(tmp_path))
+    part = spark.read.parquet(str(tmp_path / "part.parquet"))
+    old = (part.groupBy("p_partkey").pivot("p_type")
+           .agg(F.coalesce(F.first(F.lit(1)), F.lit(0)))
+           .na.fill(0))
+    assert new.columns == old.columns == [
+        "p_partkey", "null", "ECONOMY", "LARGE", "SMALL", "small"]
+    assert new.dtypes == old.dtypes
+    assert (sorted(map(tuple, new.collect()))
+            == sorted(map(tuple, old.collect())))
+    assert tuple(new.where("p_partkey = 4").first()) == (4, 1, 0, 0, 0, 0)
+    typed = onehot_parts(spark, str(tmp_path), keep_type=True)
+    assert typed.columns == ["p_partkey", "p_type"] + new.columns[1:]
+
+    spec = all_specs()["ml_onehot"]
+    assert_df_matches(spec.fn(spark, SF_SMOKE),
+                      oracle_df(duck, spec.oracle, SF_SMOKE))
+
+
+def test_kmeans_sweep_pool_is_capped(monkeypatch):
+    """A wide sweep must not start one thread per k; the reference's
+    nine ks still all run concurrently."""
+    import concurrent.futures
+
+    from recommendation_system_spark_ml_spark.ml import parity
+
+    asked = []
+
+    class RecordingPool(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, max_workers=None, *args, **kwargs):
+            asked.append(max_workers)
+            super().__init__(max_workers, *args, **kwargs)
+
+    class FakeKMeans:
+        def __init__(self, k, seed):
+            self.k = k
+
+        def fit(self, feats):
+            summary = type("S", (), {"trainingCost": 100.0 / self.k})
+            return type("M", (), {"summary": summary})
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(parity, "KMeans", FakeKMeans)
+    wide = parity.kmeans_sweep(None, ks=range(2, 200))
+    assert [k for k, _ in wide] == list(range(2, 200))
+    parity.kmeans_sweep(None)
+    assert asked == [16, 9]
 
 
 def test_als_cv_full_reproduces_reference_grid(spark):
