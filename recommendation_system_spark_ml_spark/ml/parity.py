@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
     pin_session_conf, tiny_frame)
@@ -60,27 +62,14 @@ _RATINGS70_SQL = """
     GROUP BY 1, 2
     HAVING avg(l_quantity) IS NOT NULL
 """
-_SPLIT70_SQL = ("CASE WHEN (CAST(u AS BIGINT) * 4096 + i) % 2147483648 "
-                "* 2654435761 % 4294967296 % 10 < 7 "
-                "THEN 'train' ELSE 'test' END")
-
-# Knuth multiplicative hash, same recipe as operators/relational.py's
-# split_hash -- deterministic and expressible in both engines.
-_KNUTH = 2654435761
+_SPLIT70_SQL = (f"CASE WHEN {knuth_hash_sql('CAST(u AS BIGINT) * 4096 + i')}"
+                " % 10 < 7 THEN 'train' ELSE 'test' END")
 
 
 def _hash_split(df: DataFrame, key_col) -> DataFrame:
-    """70/30 split flag from a bigint key (replaces randomSplit).
-
-    The key is folded mod 2^31 BEFORE the Knuth multiply (r9 ADVICE):
-    key * 2654435761 overflows INT64 once key > ~3.47e9 (u ≳ 8.5e5,
-    sf ≳ 6), where DuckDB raises and non-ANSI Spark silently wraps
-    negative -- breaking the identical-arithmetic claim at scale. The
-    fold keeps the product ≤ 2^31 * 2654435761 ≈ 5.7e18 < 2^63 on any
-    corpus, and is an identity (same split values) whenever
-    key < 2^31, i.e. every sf this repo verifies at."""
-    bucket = ((key_col % F.lit(2147483648)) * F.lit(_KNUTH)
-              ) % F.lit(4294967296) % F.lit(10)
+    """70/30 split flag from a bigint key (replaces randomSplit): the
+    Knuth hash gate of hashing.py."""
+    bucket = knuth_hash(key_col) % F.lit(10)
     return df.withColumn("split", F.when(bucket < 7, "train").otherwise("test"))
 
 

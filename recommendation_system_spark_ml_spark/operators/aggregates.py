@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
@@ -738,7 +740,6 @@ def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.regr_count(y, x).alias("n")))
 
 
-_KNUTH = 2654435761  # Knuth multiplicative hash (same gate as §2.7)
 _AQP_PCT = 100       # keep 100/1000 = 10% of rows
 
 
@@ -746,8 +747,8 @@ _AQP_PCT = 100       # keep 100/1000 = 10% of rows
 WITH sampled AS (
     SELECT l_returnflag, l_extendedprice
     FROM lineitem
-    WHERE (((l_orderkey * 16 + l_linenumber) % 2147483648) * {_KNUTH})
-          % 4294967296 % 1000 < {_AQP_PCT}
+    WHERE {knuth_hash_sql('l_orderkey * 16 + l_linenumber')} % 1000
+          < {_AQP_PCT}
 ), est AS (
     SELECT l_returnflag,
            count(*) AS n_sampled,
@@ -767,8 +768,8 @@ def agg_sampled_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     10% sample with a 95% confidence half-width, at 10% of the scan +
     shuffle cost. The twist that makes an APPROXIMATE answer
     hash-checkable: the sample is the deterministic Knuth hash gate
-    (§2.7), not Bernoulli randomness -- both engines pick the exact
-    same rows, so estimate AND error bar match value-for-value.
+    (hashing.py), not Bernoulli randomness -- both engines pick the
+    exact same rows, so estimate AND error bar match value-for-value.
 
     At 100 TB this is the interactive tier: the gate is a map-side
     predicate (no shuffle to sample), the estimator is one ordinary
@@ -777,18 +778,10 @@ def agg_sampled_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard-over-a-lakehouse that answers in seconds. Scale-up
     factor 1/p is exact because the gate is measure-preserving in
     expectation; the CI uses the classic normal approximation
-    1.96 * s / sqrt(n).
-
-    The mixing key is reduced mod 2^31 BEFORE the Knuth multiply so the
-    product stays below 2^62 for any orderkey: without the reduction,
-    (l_orderkey * 16 + l_linenumber) * 2654435761 overflows BIGINT once
-    l_orderkey exceeds ~2.2e8 (TPC-H sf >= ~40) -- a hard
-    ARITHMETIC_OVERFLOW under ANSI mode rather than a silent wrap."""
+    1.96 * s / sqrt(n)."""
     pin_session_conf(spark)
-    gate = ((((F.col("l_orderkey") * 16 + F.col("l_linenumber"))
-              % F.lit(2147483648)) * F.lit(_KNUTH))
-            % F.lit(4294967296) % F.lit(1000)
-            < F.lit(_AQP_PCT))
+    gate = (knuth_hash(F.col("l_orderkey") * 16 + F.col("l_linenumber"))
+            % F.lit(1000) < F.lit(_AQP_PCT))
     scale = 1000 // _AQP_PCT
     return (load(spark, sf_dir, "lineitem")
             .where(gate)
@@ -1891,6 +1884,13 @@ CM_DEPTH = 4      # hash rows
 CM_WIDTH = 256    # buckets per row
 CM_SALT = 97      # per-row hash salt offset
 CM_PROBE_N = 50   # fixed probe slice for the hashable contract
+# row r's bucket of key k: the Knuth hash of the salted key
+_CM_BUCKET_SQL = f"{knuth_hash_sql(f'k + r * {CM_SALT}')} % {CM_WIDTH}"
+
+
+def _cm_bucket() -> F.Column:
+    return (knuth_hash(F.col("k") + F.col("r") * CM_SALT)
+            % F.lit(CM_WIDTH))
 
 
 @register("agg_count_min_exact", oracle=f"""
@@ -1899,8 +1899,7 @@ WITH c AS (
 ),
 rows_d AS (SELECT unnest(range({CM_DEPTH})) AS r),
 cells AS (
-    SELECT r, (k + r * {CM_SALT}) % 2147483648 * 2654435761 % 4294967296
-               % {CM_WIDTH} AS b, count(*) AS cnt
+    SELECT r, {_CM_BUCKET_SQL} AS b, count(*) AS cnt
     FROM c CROSS JOIN rows_d GROUP BY 1, 2
 ),
 probe AS (
@@ -1912,8 +1911,7 @@ SELECT CAST(p.k AS BIGINT) AS part_key,
        CAST(min(cl.cnt) AS BIGINT) AS cm_estimate,
        min(cl.cnt) >= p.true_cnt AS cm_overestimates
 FROM probe p JOIN cells cl
-  ON cl.b = (p.k + cl.r * {CM_SALT}) % 2147483648 * 2654435761
-            % 4294967296 % {CM_WIDTH}
+  ON cl.b = {knuth_hash_sql(f"p.k + cl.r * {CM_SALT}")} % {CM_WIDTH}
 GROUP BY p.k, p.true_cnt
 """)
 def agg_count_min_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1925,11 +1923,11 @@ def agg_count_min_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-screens, per-key rate limits). The VALUE-HASHED twin of
     agg_count_min_sketch: that query sketches with xxhash64 (cells no
     other engine reproduces -- only its guarantee booleans hash),
-    while here the hashes are the Knuth multiplicative recipe with an
-    additive per-row salt -- pure integer arithmetic, identical on
-    both engines, restart-stable -- so the DuckDB oracle replays the
-    ENTIRE sketch and the estimates themselves are value-checked on a
-    high-cardinality integer key.
+    while here the hashes are the Knuth hash (hashing.py) of the key
+    plus an additive per-row salt -- pure integer arithmetic,
+    identical on both engines, restart-stable -- so the DuckDB oracle
+    replays the ENTIRE sketch and the estimates themselves are
+    value-checked on a high-cardinality integer key.
 
     The hashable contract: for a fixed {CM_PROBE_N}-key probe slice
     the oracle computes the true count AND replays the full sketch,
@@ -1949,25 +1947,14 @@ def agg_count_min_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("l_partkey").isNotNull())
          .select(F.col("l_partkey").alias("k")))
     rows_d = F.explode(F.array(*[F.lit(r) for r in range(CM_DEPTH)]))
-    # fold mod 2^31 BEFORE the Knuth multiply (the r9-ADVICE overflow
-    # class): keys >= ~3.47e9 would overflow INT64 in the product --
-    # DuckDB raises, non-ANSI Spark wraps negative. The fold keeps the
-    # product < 2^31 * 2654435761 < 2^63 on any key, is an identity at
-    # every fixture scale (partkey <= 2e5 at sf1), and makes k and
-    # k + 2^31 PROVABLY collide in every row -- the hostile-probe
-    # collider twin exercises exactly that.
-    bucket = (((F.col("k") + F.col("r") * CM_SALT) % F.lit(2147483648))
-              * F.lit(2654435761)
-              % F.lit(4294967296) % F.lit(CM_WIDTH))
+    # the kernel's mod-2^31 fold makes k and k + 2^31 PROVABLY collide
+    # in every row -- the hostile-probe collider twin exercises that
     cells = (c.select("k", rows_d.alias("r"))
-             .groupBy("r", bucket.alias("b"))
+             .groupBy("r", _cm_bucket().alias("b"))
              .agg(F.count(F.lit(1)).alias("cnt")))
     probe = (c.where(F.col("k") < CM_PROBE_N)
              .groupBy("k").agg(F.count(F.lit(1)).alias("true_cnt")))
-    pb = (((F.col("k") + F.col("r") * CM_SALT) % F.lit(2147483648))
-          * F.lit(2654435761)
-          % F.lit(4294967296) % F.lit(CM_WIDTH))
-    return (probe.join(F.broadcast(cells), pb == F.col("b"))
+    return (probe.join(F.broadcast(cells), _cm_bucket() == F.col("b"))
             .groupBy(F.col("k").cast("long").alias("part_key"),
                      F.col("true_cnt").cast("long").alias("true_count"))
             .agg(F.min("cnt").cast("long").alias("cm_estimate"))
@@ -1984,18 +1971,12 @@ WITH c AS (
 ),
 rows_d AS (SELECT unnest(range({CM_DEPTH})) AS r),
 shard_cells AS (
-    SELECT shard, r,
-           (k + r * {CM_SALT}) % 2147483648 * 2654435761 % 4294967296
-               % {CM_WIDTH} AS b,
-           count(*) AS cnt
+    SELECT shard, r, {_CM_BUCKET_SQL} AS b, count(*) AS cnt
     FROM c CROSS JOIN rows_d GROUP BY 1, 2, 3
 ),
 merged AS (SELECT r, b, sum(cnt) AS cnt FROM shard_cells GROUP BY 1, 2),
 whole AS (
-    SELECT r,
-           (k + r * {CM_SALT}) % 2147483648 * 2654435761 % 4294967296
-               % {CM_WIDTH} AS b,
-           count(*) AS cnt
+    SELECT r, {_CM_BUCKET_SQL} AS b, count(*) AS cnt
     FROM c CROSS JOIN rows_d GROUP BY 1, 2
 )
 SELECT CAST(m.r AS BIGINT) AS r, CAST(m.b AS BIGINT) AS b,
@@ -2029,9 +2010,7 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("l_partkey").alias("k"),
                  (F.col("l_suppkey") % 2).alias("shard")))
     rows_d = F.explode(F.array(*[F.lit(r) for r in range(CM_DEPTH)]))
-    bucket = (((F.col("k") + F.col("r") * CM_SALT) % F.lit(2147483648))
-              * F.lit(2654435761)
-              % F.lit(4294967296) % F.lit(CM_WIDTH))
+    bucket = _cm_bucket()
     shard_cells = (c.select("k", "shard", rows_d.alias("r"))
                    .groupBy("shard", "r", bucket.alias("b"))
                    .agg(F.count(F.lit(1)).alias("cnt")))

@@ -30,9 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
+from recommendation_system_spark_ml_spark.streaming.incremental import (
+    IN_CORPUS_SQL, in_corpus)
 
 
 def _words(col: str = "text"):
@@ -1234,15 +1238,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("removed_implies_exact")))
 
 
-_INC_KNUTH = 2654435761
-
-
 @register("dedup_incremental", oracle=f"""
 WITH fp AS (
     SELECT doc_id,
            md5(array_to_string(list_sort(list_distinct(
                string_split(lower(text), ' '))), ' ')) AS fingerprint,
-           (doc_id * {_INC_KNUTH}) % 4294967296 % 10 < 9 AS in_corpus
+           {IN_CORPUS_SQL} AS in_corpus
     FROM documents
 ), idx AS (
     SELECT fingerprint, min(doc_id) AS corpus_doc_id
@@ -1274,8 +1275,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.array_join(F.array_sort(F.array_distinct(
             F.split(F.lower("text"), " "))), " ")).alias("fingerprint"),
-        ((F.col("doc_id") * _INC_KNUTH) % 4294967296 % 10 < 9)
-        .alias("in_corpus"))
+        in_corpus().alias("in_corpus"))
     index_path = scratch_path(sf_dir, "dedup_fp_index")
     (fp.where("in_corpus")
      .groupBy("fingerprint")
@@ -1797,9 +1797,6 @@ def dedup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("span_tokens")))
 
 
-_KNUTH_SPLIT = 2654435761  # same multiplicative gate as §2.7 split_hash
-
-
 @register("split_leakage_safe", bench=True, oracle=f"""
 WITH RECURSIVE
 edges AS (
@@ -1834,10 +1831,8 @@ comp AS (
     SELECT doc AS doc_id, min(comp) AS component FROM reach GROUP BY doc
 )
 SELECT doc_id, CAST(component AS BIGINT) AS component,
-       CASE WHEN ((component % 2147483648) * {_KNUTH_SPLIT})
-                 % 4294967296 % 10 < 8 THEN 'train'
-            WHEN ((component % 2147483648) * {_KNUTH_SPLIT})
-                 % 4294967296 % 10 < 9 THEN 'valid'
+       CASE WHEN {knuth_hash_sql('component')} % 10 < 8 THEN 'train'
+            WHEN {knuth_hash_sql('component')} % 10 < 9 THEN 'valid'
             ELSE 'test' END AS split
 FROM comp
 """)
@@ -1850,10 +1845,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     close this way (Lee et al. 2022 dedup train against test;
     Gao et al. The Pile split after clustering).
 
-    Same Knuth multiplicative gate as split_hash -- deterministic,
-    restart-stable, oracle-reproducible -- with the mixing key reduced
-    mod 2^31 BEFORE the multiply so ANSI-mode BIGINT arithmetic cannot
-    overflow at any component id (the agg_sampled_estimate hardening).
+    Same Knuth hash gate (hashing.py) as split_hash -- deterministic,
+    restart-stable, oracle-reproducible, overflow-free at any
+    component id.
 
     At 100 TB: rides the PERSISTED components artifact
     (build_components_artifact -- the dedup_cluster_size_dist
@@ -1868,9 +1862,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session_conf(spark)
     comp = spark.read.parquet(
         build_components_artifact(spark, sf_dir))
-    bucket = (((F.col("component") % F.lit(2147483648))
-               * F.lit(_KNUTH_SPLIT))
-              % F.lit(4294967296) % 10)
+    bucket = knuth_hash(F.col("component")) % 10
     split = (F.when(bucket < 8, "train")
              .when(bucket < 9, "valid")
              .otherwise("test"))
@@ -1954,7 +1946,7 @@ WITH base AS (
     SELECT doc_id,
            list_distinct(list_filter(string_split(lower(text), ' '),
                                      w -> w <> '')) AS words,
-           (doc_id * {_INC_KNUTH}) % 4294967296 % 10 < 9 AS in_corpus
+           {IN_CORPUS_SQL} AS in_corpus
     FROM documents
     WHERE len(list_filter(string_split(lower(text), ' '), w -> w <> '')) > 0
 ), sig AS (
@@ -2017,8 +2009,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_distinct(F.filter(_words(), lambda w: w != ""))
         .alias("words"),
-        ((F.col("doc_id") * _INC_KNUTH) % 4294967296 % 10 < 9)
-        .alias("in_corpus"))
+        in_corpus().alias("in_corpus"))
         .where(F.size("words") > 0))
 
     def seeded(i):
@@ -2280,7 +2271,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_pairs", "n_docs"))
 
 
-_KNUTH_SAMPLE = 2654435761  # shared with operators/relational.py gates
 SAMPLE_BUCKETS = 10
 SAMPLE_KEEP = 3  # deterministic 30% doc sample
 
@@ -2289,8 +2279,7 @@ SAMPLE_KEEP = 3  # deterministic 30% doc sample
 WITH s AS (
     SELECT doc_id, sha256(text) AS fp
     FROM documents
-    WHERE (doc_id * {_KNUTH_SAMPLE}) % 4294967296 % {SAMPLE_BUCKETS}
-          < {SAMPLE_KEEP}
+    WHERE {knuth_hash_sql('doc_id')} % {SAMPLE_BUCKETS} < {SAMPLE_KEEP}
 ), samp AS (
     SELECT CAST(count(*) AS BIGINT) AS m,
            CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS dups
@@ -2335,8 +2324,7 @@ def pipeline_dedup_sample_estimate(spark: SparkSession,
     double tree in both engines."""
     pin_session_conf(spark)
     docs = load(spark, sf_dir, "documents")
-    gate = ((F.col("doc_id") * F.lit(_KNUTH_SAMPLE))
-            % F.lit(4294967296) % F.lit(SAMPLE_BUCKETS))
+    gate = knuth_hash(F.col("doc_id")) % F.lit(SAMPLE_BUCKETS)
     fp = F.sha2("text", 256)
     samp = (docs.where(gate < SAMPLE_KEEP)
             .agg(F.count(F.lit(1)).cast("long").alias("m"),

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
-    pin_session_conf, scratch_path as _scratch)
+    pin_session_conf, scratch_path as _scratch, tiny_frame)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 
@@ -365,7 +365,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (load(spark, sf_dir, "orders")
      .withColumn("o_year", F.year("o_orderdate").cast("int"))
      .write.mode("overwrite").partitionBy("o_year").parquet(path))
-    cal = spark.createDataFrame(_DPP_CAL, "o_year int, era string")
+    cal = tiny_frame(spark, _DPP_CAL, "o_year int, era string")
     f = spark.read.parquet(path)
     return (f.join(F.broadcast(cal), "o_year")
             .where(F.col("era") == "target")

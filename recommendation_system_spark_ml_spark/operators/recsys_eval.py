@@ -30,8 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
-from recommendation_system_spark_ml_spark.session import pin_session_conf
+from recommendation_system_spark_ml_spark.session import (
+    pin_session_conf, tiny_frame)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 from recommendation_system_spark_ml_spark.ml.parity import ratings_analog
 from recommendation_system_spark_ml_spark.operators.recommend import (
@@ -41,14 +44,14 @@ M_PRIOR = 5.0     # Bayesian prior strength (pseudo-ratings at the global mean)
 TOP_ITEMS = 100   # leaderboard length for the Bayesian-average ranking
 POP_POOL = 200    # popularity candidate pool fed to the per-user cut
 EVAL_K = 5        # top-K recommendations evaluated / emitted
-_KNUTH = 2654435761  # Knuth multiplicative hash (same gate as §2.7)
 
-# Held-out split gate on the (user, item) pair: both ids are folded to
-# 2^20 before mixing so the product stays far inside BIGINT for any
-# realistic id domain (the fold only affects WHICH bucket a pair
-# lands in, never determinism). ~80% train / 20% test.
-_SPLIT_NUM = "((CAST(u AS BIGINT) % 1048576) * 31 + (CAST(i AS BIGINT) % 1048576))"
-_SPLIT_SQL = f"({_SPLIT_NUM} * {_KNUTH}) % 4294967296 % 10"
+# Held-out split gate on the (user, item) pair: the Knuth hash
+# (hashing.py) of a key mixing both ids, each folded to 2^20 so the
+# pair key stays below 2^31 for any id domain (the fold only affects
+# WHICH bucket a pair lands in, never determinism). ~80% train / 20%
+# test.
+_SPLIT_NUM = "(CAST(u AS BIGINT) % 1048576) * 31 + (CAST(i AS BIGINT) % 1048576)"
+_SPLIT_SQL = f"{knuth_hash_sql(_SPLIT_NUM)} % 10"
 
 
 def _base_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +196,7 @@ def _bucket_col():
     ml_rec_eval_als so the two can never drift."""
     num = ((F.col("u").cast("bigint") % 1048576) * 31
            + (F.col("i").cast("bigint") % 1048576))
-    return (num * _KNUTH) % F.lit(4294967296) % 10
+    return knuth_hash(num) % 10
 
 
 def _split_ratings(ratings: DataFrame):
@@ -558,8 +561,7 @@ def _eval_user_pool(train: DataFrame, test_users: DataFrame) -> DataFrame:
     restart-stable and oracle-expressible; the cap engages at NO
     driver-verified sf (cotrained populations are 149 / 1.5k / ~15k
     at sf0.001/0.01/0.1), so every hashed value is unchanged there."""
-    gate = ((F.col("u").cast("bigint") % F.lit(2147483648))
-            * F.lit(_KNUTH)) % F.lit(4294967296)
+    gate = knuth_hash(F.col("u").cast("bigint"))
     return (test_users.join(train.select("u").distinct(), "u")
             .orderBy(gate.asc(), F.col("u").asc())
             .limit(EVAL_USER_CAP))
@@ -638,8 +640,7 @@ WITH ratings0 AS ({_RATINGS_SQL}),
 tr_u AS (SELECT DISTINCT u FROM train),
 pool AS (
     SELECT tu.u FROM test_users tu JOIN tr_u ON tu.u = tr_u.u
-    ORDER BY (CAST(tu.u AS BIGINT) % 2147483648) * {_KNUTH} % 4294967296,
-             tu.u
+    ORDER BY {knuth_hash_sql('CAST(tu.u AS BIGINT)')}, tu.u
     LIMIT {EVAL_USER_CAP}
 )
 SELECT (SELECT CAST(count(*) AS BIGINT) FROM train) AS n_train,
@@ -702,9 +703,9 @@ def ml_rec_eval_als(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_train, n_test = int(n_train or 0), int(n_test or 0)
     n_pool = pool.count()
     subset = int(row["n_users"] or 0) <= n_pool
-    return spark.createDataFrame(
-        [(n_train, n_test, n_pool,
-          bool(subset), bool(in_range), bool(ndcg_band))],
+    return tiny_frame(
+        spark, [(n_train, n_test, n_pool,
+                 bool(subset), bool(in_range), bool(ndcg_band))],
         "n_train bigint, n_test bigint, n_eval_users bigint, "
         "scored_subset_of_pool boolean, "
         "metrics_in_unit_range boolean, ndcg_in_band boolean")

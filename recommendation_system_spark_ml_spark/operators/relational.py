@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
     pin_session_conf, scratch_path as _scratch)
@@ -241,23 +243,17 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- R: deterministic split ------------------------------------------------
 
-# Knuth multiplicative hash: identical 64-bit integer arithmetic in any
-# engine, unlike Spark's murmur3 `hash()` or DuckDB's `hash()`. This is
-# the oracle-reproducible replacement for the reference's randomSplit
-# (MLR.py:145) -- at 100 TB a hash split is also restart-stable, which
-# randomSplit is not (it depends on partitioning).
-_KNUTH = 2654435761
-
-
+# The Knuth hash gate (hashing.py) in place of the reference's
+# randomSplit (MLR.py:145).
 @register("split_hash", oracle=f"""
 SELECT o_orderkey,
-       CASE WHEN (o_orderkey * {_KNUTH}) % 4294967296 % 10 < 7
+       CASE WHEN {knuth_hash_sql('o_orderkey')} % 10 < 7
             THEN 'train' ELSE 'test' END AS split
 FROM orders
 """)
 def split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session_conf(spark)
-    bucket = (F.col("o_orderkey") * F.lit(_KNUTH)) % F.lit(4294967296) % F.lit(10)
+    bucket = knuth_hash(F.col("o_orderkey")) % F.lit(10)
     return (load(spark, sf_dir, "orders")
             .select("o_orderkey",
                     F.when(bucket < 7, "train").otherwise("test").alias("split")))
@@ -266,7 +262,7 @@ def split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("sample_stratified", oracle=f"""
 WITH gated AS (
     SELECT l_orderkey, l_linenumber, l_returnflag,
-           ((l_orderkey * 16 + l_linenumber) * {_KNUTH}) % 4294967296 % 1000
+           {knuth_hash_sql('l_orderkey * 16 + l_linenumber')} % 1000
                AS bucket,
            CASE l_returnflag WHEN 'A' THEN 500 WHEN 'N' THEN 100
                              WHEN 'R' THEN 250 END AS cutoff
@@ -287,8 +283,8 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     not change the sample), and it makes the sample oracle-checkable."""
     pin_session_conf(spark)
     li = load(spark, sf_dir, "lineitem")
-    bucket = ((F.col("l_orderkey") * 16 + F.col("l_linenumber"))
-              * F.lit(_KNUTH)) % F.lit(4294967296) % F.lit(1000)
+    bucket = knuth_hash(F.col("l_orderkey") * 16
+                        + F.col("l_linenumber")) % F.lit(1000)
     cutoff = (F.when(F.col("l_returnflag") == "A", 500)
               .when(F.col("l_returnflag") == "N", 100)
               .when(F.col("l_returnflag") == "R", 250))

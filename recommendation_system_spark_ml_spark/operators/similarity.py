@@ -26,8 +26,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
-from recommendation_system_spark_ml_spark.session import pin_session_conf
+from recommendation_system_spark_ml_spark.session import (
+    pin_session_conf, tiny_frame)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 N_QUERIES = 10  # vec_id < 10 is the fixed query set for the checks
@@ -1400,8 +1403,8 @@ def vec_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims_present = sorted({i for i, _ in cells})
     d = len(dims_present)
     if d == 0:
-        return spark.createDataFrame(
-            [], "dim int, loading double, eigenvalue double")
+        return tiny_frame(
+            spark, [], "dim int, loading double, eigenvalue double")
     v = {i: 1.0 / _math.sqrt(d) for i in dims_present}
     nrm = None
     for _ in range(N_PC_ITER):
@@ -1556,13 +1559,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _math.floor(best_score * _MMR_Q + 0.5) / _MMR_Q))
         selected.append(best_id)
         del remaining[best_id]
-    return spark.createDataFrame(
-        out, "rank int, vec_id bigint, relevance double, mmr_score double")
+    return tiny_frame(spark, out, "rank int, vec_id bigint, "
+                      "relevance double, mmr_score double")
 
 
 JL_PROJ_DIMS = 16   # target dimensionality of the random projection
 JL_CHECK_N = 20     # probe slice: all pairs among the first N vectors
-_JL_KNUTH = 2654435761  # Knuth multiplicative hash (public constant)
 
 
 @register("vec_random_projection_jl", oracle=f"""
@@ -1574,8 +1576,8 @@ p AS (
     SELECT vec_id, x,
            list_transform(range(0, {JL_PROJ_DIMS}), o ->
                list_sum(list_transform(range(1, len(x) + 1), j ->
-                   (CASE WHEN ((o * len(x) + (j - 1)) * {_JL_KNUTH})
-                              % 4294967296 % 2 = 0
+                   (CASE WHEN {knuth_hash_sql('o * len(x) + (j - 1)')}
+                              % 2 = 0
                          THEN 1.0 ELSE -1.0 END) * x[j]))) AS y
     FROM v
 ),
@@ -1629,8 +1631,7 @@ def vec_random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def comp(o):
             def term(acc, j):
-                sign = F.when(((o * d + (j - 1)) * F.lit(_JL_KNUTH))
-                              % F.lit(4294967296) % 2 == 0,
+                sign = F.when(knuth_hash(o * d + (j - 1)) % 2 == 0,
                               F.lit(1.0)).otherwise(F.lit(-1.0))
                 return acc + sign * F.element_at(x, j)
             return F.aggregate(F.sequence(F.lit(1), d), F.lit(0.0), term)
@@ -1869,13 +1870,10 @@ def ml_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("avg_silhouette")))
 
 
-_NC_KNUTH = 2654435761  # split gate (§2.7 recipe)
-
-
 @register("ml_nearest_centroid", oracle=f"""
 WITH v AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x, label,
-           ((vec_id % 16777216) * {_NC_KNUTH}) % 4294967296 % 10 AS bucket
+           {knuth_hash_sql('vec_id')} % 10 AS bucket
     FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL
 ),
 train AS (SELECT * FROM v WHERE bucket < 8),
@@ -1921,13 +1919,7 @@ def ml_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("embedding").isNotNull() & F.col("label").isNotNull())
          .select("vec_id", F.col("embedding").cast("array<double>")
                  .alias("x"), "label",
-                 # fold the id mod 2^24 BEFORE the Knuth multiply so
-                 # the product stays BIGINT-exact for any vec_id (the
-                 # agg_bootstrap_ci / _SPLIT_NUM recipe; unfolded, ids
-                 # >= ~3.47e9 overflow int64 under ANSI mode).
-                 (((F.col("vec_id") % F.lit(16777216)) * _NC_KNUTH)
-                  % F.lit(4294967296) % 10)
-                 .alias("bucket")))
+                 (knuth_hash(F.col("vec_id")) % 10).alias("bucket")))
     train = v.where(F.col("bucket") < 8)
     test = v.where(F.col("bucket") >= 8)
     cent = (train.select("label", F.posexplode("x").alias("pos", "val"))

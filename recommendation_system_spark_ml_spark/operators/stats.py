@@ -15,8 +15,7 @@ MapReduce-bootstrap paper).
 
 Everything is exact integer/rational arithmetic until one final
 division, so every operator is DuckDB-hash-verified; randomness is
-the restart-stable Knuth multiplicative hash (§2.7 recipe), never an
-engine RNG.
+the restart-stable Knuth hash (hashing.py), never an engine RNG.
 
 The reference has no inference surface at all (MovieLensRecommender.py
 stops at RMSE point estimates, :248-253); these are what turns its
@@ -29,11 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
-_KNUTH = 2654435761  # Knuth multiplicative hash (same gate as §2.7)
 _Q = 1_000_000       # 6-decimal floor quantization, shared with oracles
 
 # ---------------------------------------------------------------- MWU
@@ -338,7 +338,7 @@ WITH rows_b AS (
 ),
 w AS (
     SELECT b, x,
-           {_pois_case_sql(f"(((k * 131 + b) * {_KNUTH}) % 4294967296) / 4294967296.0")} AS wt
+           {_pois_case_sql(f"{knuth_hash_sql('k * 131 + b')} / 4294967296.0")} AS wt
     FROM rows_b
 ),
 reps AS (
@@ -361,16 +361,15 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per replicate are weighted means; the CI is the 2.5/97.5
     percentile of the {N_BOOT} replicate means, the SE their stddev.
 
-    Determinism: weights come from the restart-stable Knuth hash of
-    (orderkey fold, replicate) -- both engines build the identical
-    uniform (an exact integer divided by 2^32) and walk the same
-    branched CDF literals, so every weight matches bit-for-bit; the
-    key folds to 2^24 before mixing so the hash product stays far
-    inside BIGINT at any scale. Replicate means floor-quantize at
-    1e-6 before the percentile pass, absorbing partial-sum order
-    noise. Shape: explode x{N_BOOT} map-side, ONE groupBy(replicate)
-    partial-combines to {N_BOOT} rows, then a bounded final aggregate
-    -- wall cost is one scan of {N_BOOT}x the input, zero joins."""
+    Determinism: weights come from the restart-stable Knuth hash
+    (hashing.py) of (orderkey fold, replicate) -- both engines build
+    the identical uniform (an exact integer divided by 2^32) and walk
+    the same branched CDF literals, so every weight matches
+    bit-for-bit. Replicate means floor-quantize at 1e-6 before the
+    percentile pass, absorbing partial-sum order noise. Shape: explode
+    x{N_BOOT} map-side, ONE groupBy(replicate) partial-combines to
+    {N_BOOT} rows, then a bounded final aggregate -- wall cost is one
+    scan of {N_BOOT}x the input, zero joins."""
     pin_session_conf(spark)
     rows_b = (load(spark, sf_dir, "orders")
               .where(F.col("o_totalprice").isNotNull())
@@ -378,8 +377,7 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("o_totalprice").alias("x"))
               .withColumn("b", F.explode(F.sequence(
                   F.lit(0), F.lit(N_BOOT - 1)))))
-    u = (((F.col("k") * 131 + F.col("b")) * _KNUTH) % F.lit(4294967296)
-         ) / F.lit(4294967296.0)
+    u = knuth_hash(F.col("k") * 131 + F.col("b")) / F.lit(4294967296.0)
     w = rows_b.select("b", "x", _pois_case_col(u).alias("wt"))
     reps = (w.groupBy("b")
             .agg((F.floor(F.sum(F.col("wt") * F.col("x"))

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
@@ -466,13 +468,12 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # listed fall back to the default. Mirrored literally in the oracle.
 _MIX_RATES = {"src0": 1000, "src1": 600, "src2": 300, "src3": 150}
 _MIX_DEFAULT = 50
-_MIX_KNUTH = 2654435761  # Knuth multiplicative hash (public constant)
 
 
 @register("pipeline_interleave", oracle=f"""
 WITH gated AS (
     SELECT doc_id, source, lang,
-           (doc_id * {_MIX_KNUTH}) % 4294967296 % 1000 AS bucket,
+           {knuth_hash_sql('doc_id')} % 1000 AS bucket,
            CASE source
                 WHEN 'src0' THEN {_MIX_RATES['src0']}
                 WHEN 'src1' THEN {_MIX_RATES['src1']}
@@ -482,7 +483,7 @@ WITH gated AS (
     FROM documents
 )
 SELECT doc_id, source, lang,
-       CAST((doc_id * {_MIX_KNUTH}) % 4294967296 % 8 AS BIGINT) AS mix_shard
+       CAST({knuth_hash_sql('doc_id')} % 8 AS BIGINT) AS mix_shard
 FROM gated WHERE bucket < rate
 """)
 def pipeline_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,7 +493,7 @@ def pipeline_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     and survivors get a stable mix_shard for round-robin interleaved
     reading downstream.
 
-    The gate is the Knuth multiplicative hash on doc_id: per-row, no
+    The gate is the Knuth hash (hashing.py) of doc_id: per-row, no
     shuffle, no RNG state -- so the mix is restart-stable (a re-run of
     a failed stage keeps the same sample), oracle-checkable, and
     adjusting one source's weight leaves every other source's kept set
@@ -501,7 +502,7 @@ def pipeline_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     balanced without a repartition."""
     pin_session_conf(spark)
     docs = load(spark, sf_dir, "documents")
-    hashed = (F.col("doc_id") * F.lit(_MIX_KNUTH)) % F.lit(4294967296)
+    hashed = knuth_hash(F.col("doc_id"))
     rate = F.when(F.col("source") == "src0", _MIX_RATES["src0"])
     for s in ("src1", "src2", "src3"):
         rate = rate.when(F.col("source") == s, _MIX_RATES[s])
@@ -926,10 +927,7 @@ def text_quality_model_scores(spark: SparkSession,
     labeled = with_r.crossJoin(F.broadcast(thr_df)).select(
         "doc_id", "text",
         (F.col("sw_ratio") > F.col("_thr")).cast("double").alias("label"),
-        # id folded mod 2^24 before the Knuth multiply (BIGINT-exact
-        # at any doc_id, the _SPLIT_NUM recipe)
-        F.when(((F.col("doc_id") % F.lit(16777216)) * _MIX_KNUTH)
-               % 4294967296 % 10 < 7,
+        F.when(knuth_hash(F.col("doc_id")) % 10 < 7,
                "train").otherwise("test").alias("split"))
     pipe = Pipeline(stages=[
         RegexTokenizer(inputCol="text", outputCol="tokens",
@@ -971,8 +969,7 @@ thr AS (SELECT floor(quantile_cont(sw_ratio, 0.5) * 1e8 + 0.5) / 1e8 AS t
 lab AS (
     SELECT doc_id,
            CASE WHEN sw_ratio > t THEN 1 ELSE 0 END AS label,
-           CASE WHEN ((doc_id % 16777216) * {_MIX_KNUTH})
-                     % 4294967296 % 10 < 7
+           CASE WHEN {knuth_hash_sql('doc_id')} % 10 < 7
                 THEN 'train' ELSE 'test' END AS split
     FROM d, thr
 )
@@ -1253,8 +1250,7 @@ WITH c AS (
 )
 SELECT d.doc_id, d.lang, k.cutoff AS keep_per_mille
 FROM documents d JOIN k ON d.lang = k.lang
-WHERE ((d.doc_id % 2147483648) * {_MIX_KNUTH}) % 4294967296 % 1000
-      < k.cutoff
+WHERE {knuth_hash_sql('d.doc_id')} % 1000 < k.cutoff
 """)
 def pipeline_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled domain rebalancing (the mT5/XLM-R multi-
@@ -1271,8 +1267,7 @@ def pipeline_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression floor(1000 * sqrt(min) / sqrt(cnt)) -- two correctly-
     rounded IEEE sqrts and one division, written with identical
     association on both engines, then floored to an integer cutoff;
-    the keep gate itself is the overflow-safe integer Knuth hash
-    (key reduced mod 2^31 before the multiply, §2.7 convention).
+    the keep gate itself is the integer Knuth hash (hashing.py).
 
     Scale shape: the domain-count table is a map-side-combinable agg
     over a low-cardinality key (5 langs here; domains are bounded in
@@ -1290,8 +1285,7 @@ def pipeline_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                          * F.sqrt(F.col("min_cnt").cast("double"))
                          / F.sqrt(F.col("cnt").cast("double")))
                  .alias("keep_per_mille")))
-    gate = ((F.col("doc_id") % F.lit(2147483648)) * F.lit(_MIX_KNUTH)) \
-        % F.lit(4294967296) % F.lit(1000)
+    gate = knuth_hash(F.col("doc_id")) % F.lit(1000)
     return (docs.join(F.broadcast(k), "lang")
             .where(gate < F.col("keep_per_mille"))
             .select("doc_id", "lang", "keep_per_mille"))
@@ -1703,7 +1697,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("bm25")))
 
 
-@register("pipeline_epoch_mix", oracle="""
+@register("pipeline_epoch_mix", oracle=f"""
 WITH w AS (
     SELECT doc_id, source,
            1 + (CAST(substr(source, 4) AS INTEGER) % 4) // 2 AS whole,
@@ -1712,8 +1706,7 @@ WITH w AS (
 ), n AS (
     SELECT doc_id, source,
            whole + CASE WHEN has_frac
-                        AND ((doc_id % 2147483648) * 2654435761)
-                            % 4294967296 % 10 < 5
+                        AND {knuth_hash_sql('doc_id')} % 10 < 5
                         THEN 1 ELSE 0 END AS n_epochs
     FROM w
 )
@@ -1726,8 +1719,8 @@ def pipeline_epoch_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources repeat for multiple epochs within one training run).
     Each source gets a weight 1.0/1.5/2.0/2.5 derived from its id;
     a document is emitted floor(w) times plus one extra epoch for
-    the fractional part, gated per-document by the overflow-hardened
-    Knuth hash -- so a 1.5-epoch source repeats exactly half its
+    the fractional part, gated per-document by the Knuth hash
+    (hashing.py) -- so a 1.5-epoch source repeats exactly half its
     docs, deterministically, restart-stable (the pipeline_interleave
     property), with NO float in the gate: the fraction is handled
     in integer halves.
@@ -1742,8 +1735,7 @@ def pipeline_epoch_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_num = F.substring("source", 4, 10).cast("int")
     whole = 1 + F.floor((src_num % 4) / 2).cast("int")
     has_frac = (src_num % 4) % 2 == F.lit(1)
-    gate = (((F.col("doc_id") % F.lit(2147483648)) * F.lit(2654435761))
-            % F.lit(4294967296) % 10 < 5)
+    gate = knuth_hash(F.col("doc_id")) % 10 < 5
     n_epochs = whole + F.when(has_frac & gate, 1).otherwise(0)
     return (docs.select("doc_id", "source", n_epochs.alias("n_epochs"))
             .select("doc_id", "source",
@@ -2461,14 +2453,13 @@ def pipeline_filter_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # loop is DuckDB-hash-verified -- a LEARNED classifier next to
 # text_langid's fixed heuristic and text_quality_model's rows-only
 # MLlib pipeline.
-_NB_KNUTH = 2654435761
 _NB_Q = 1_000_000
 
 
 @register("ml_naive_bayes_lang", oracle=f"""
 WITH docs AS (
     SELECT doc_id, lower(text) AS t, lang,
-           ((doc_id % 16777216) * {_NB_KNUTH}) % 4294967296 % 10 AS bucket
+           {knuth_hash_sql('doc_id')} % 10 AS bucket
     FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
 ),
 train AS (SELECT * FROM docs WHERE bucket < 8),
@@ -2547,11 +2538,7 @@ def ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (load(spark, sf_dir, "documents")
             .where(F.col("text").isNotNull() & F.col("lang").isNotNull())
             .select("doc_id", F.lower("text").alias("t"), "lang",
-                    # fold mod 2^24 before the Knuth multiply: BIGINT-
-                    # exact for any doc_id (the _SPLIT_NUM recipe).
-                    (((F.col("doc_id") % F.lit(16777216)) * _NB_KNUTH)
-                     % F.lit(4294967296) % 10)
-                    .alias("bucket")))
+                    (knuth_hash(F.col("doc_id")) % 10).alias("bucket")))
     train = docs.where(F.col("bucket") < 8)
     test = docs.where(F.col("bucket") >= 8)
     tr_tok = (train.select("lang", F.explode(F.split("t", " ")).alias("tok"))

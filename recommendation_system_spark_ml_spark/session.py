@@ -37,12 +37,21 @@ _DEFAULTS = {
 }
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: a heap cap above
+    what the host has lets the local JVM grow until the OS kills it."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
+    return f"{min(48 << 10, half_mb)}m"
+
+
 def get_spark(app_name: str = "recommendation_system_spark_ml_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (harness contract) or 32.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (harness contract) or 32;
+    the driver heap to $SPARK_GRAFT_DRIVER_MEM or
+    ``default_driver_memory()``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -53,7 +62,8 @@ def get_spark(app_name: str = "recommendation_system_spark_ml_spark",
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()))
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
@@ -97,7 +107,9 @@ def tiny_frame(spark: SparkSession, rows, schema: str):
     value is a literal of an ``inline(array(struct(...)))`` over a
     one-row, one-partition ``range``, so the plan never leaves the JVM.
     ``schema`` is a DDL string; each value is cast to its field's type
-    and rows keep their order."""
+    and rows keep their order. Planning cost grows with the number of
+    values: from about 64 rows x 3 columns on, ``createDataFrame`` was
+    the faster form in a session whose Python workers were running."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 

@@ -38,11 +38,21 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recommendation_system_spark_ml_spark.hashing import (
+    knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
-_KNUTH = 2654435761  # same corpus/batch split gate as dedup_incremental
+# The corpus/batch gate shared with operators/dedup.py's incremental
+# faces: the Knuth hash (hashing.py) of doc_id keeps ~90% of the docs
+# in the existing corpus and routes the rest to the arriving batch.
+IN_CORPUS_SQL = f"{knuth_hash_sql('doc_id')} % 10 < 9"
+
+
+def in_corpus() -> F.Column:
+    """TRUE for a corpus doc, FALSE for a batch doc (IN_CORPUS_SQL)."""
+    return knuth_hash(F.col("doc_id")) % 10 < 9
 
 DOCS_SCHEMA = ("doc_id bigint, text string, lang string, source string, "
                "n_chars bigint")
@@ -83,7 +93,7 @@ def dedup_ingest_batch(batch_df: DataFrame, batch_id: int,
     at-least-once replay."""
     spark = batch_df.sparkSession
     fp = (batch_df
-          .where(~((F.col("doc_id") * _KNUTH) % 4294967296 % 10 < 9))
+          .where(~in_corpus())
           .select("doc_id", _fingerprint().alias("fingerprint")))
     first_in_batch = (fp.groupBy("fingerprint")
                       .agg(F.min("doc_id").alias("first_batch")))
@@ -119,7 +129,7 @@ WITH fp AS (
     SELECT doc_id,
            md5(array_to_string(list_sort(list_distinct(
                string_split(lower(text), ' '))), ' ')) AS fingerprint,
-           (doc_id * {_KNUTH}) % 4294967296 % 10 < 9 AS in_corpus
+           {IN_CORPUS_SQL} AS in_corpus
     FROM documents
 ), idx AS (
     SELECT fingerprint, min(doc_id) AS keeper
@@ -162,7 +172,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_incremental also pays; batch=seed so stream deltas never
     # collide with it)
     (load(spark, sf_dir, "documents")
-     .where((F.col("doc_id") * _KNUTH) % 4294967296 % 10 < 9)
+     .where(in_corpus())
      .select("doc_id", _fingerprint().alias("fingerprint"))
      .groupBy("fingerprint")
      .agg(F.min("doc_id").alias("keeper_doc_id"))

@@ -61,11 +61,21 @@ def test_als_eval_contract_invariants(spark):
     assert row.metrics_in_unit_range and row.ndcg_in_band
 
 
-def test_cms_fold_keeps_product_in_int64():
+def test_cms_fold_keeps_product_in_int64(spark):
     """The mod-2^31 fold bounds the Knuth product for ANY key (the
-    r9-ADVICE overflow class) and is an identity at fixture scales."""
+    r9-ADVICE overflow class) and is an identity at fixture scales.
+    The kernel pair (hashing.py) agrees with an independent Python
+    reference on both engines, negative keys included, and evaluates
+    the keys on which the unfolded product overflows -- where both
+    engines raise with the unfolded form."""
+    import duckdb
+    import pytest
+
+    from recommendation_system_spark_ml_spark.hashing import (
+        knuth_hash, knuth_hash_sql)
     from recommendation_system_spark_ml_spark.operators.aggregates import (
         CM_DEPTH, CM_SALT)
+    from recommendation_system_spark_ml_spark.session import tiny_frame
 
     worst = (2 ** 31 - 1) * 2654435761
     assert worst < 2 ** 63 - 1
@@ -74,6 +84,64 @@ def test_cms_fold_keeps_product_in_int64():
         for r in range(CM_DEPTH):
             x = k + r * CM_SALT
             assert x % 2147483648 == x
+
+    def tmod(a, m):  # C-style remainder: truncates toward zero
+        return -(-a % m) if a < 0 else a % m
+
+    def ref(k):  # (hash, hash % 10)
+        h = tmod(tmod(k, 2 ** 31) * 2654435761, 2 ** 32)
+        return h, tmod(h, 10)
+
+    keys = [0, 1, 499, 2 ** 24, 2 ** 31 - 1, 2 ** 31, 3_500_000_000,
+            4_000_000_000, 2 ** 62, -1, -12345]
+    want = {k: ref(k) for k in keys}
+    assert want[-12345][1] == -1  # a gate's % 10 truncates too
+    keys_df = tiny_frame(spark, [(k,) for k in keys], "k bigint")
+    h = knuth_hash(F.col("k"))
+    got_spark = {r[0]: (r[1], r[2]) for r in keys_df.select(
+        "k", h, h % 10).collect()}
+    values = ", ".join(f"({k}::BIGINT)" for k in keys)
+    # the failure arm: from ~3.47e9 up, key * 2654435761 leaves INT64
+    big = [k for k in keys if k >= 3_470_000_000]
+    assert len(big) == 3
+    with duckdb.connect() as con:
+        got_duck = {r[0]: (r[1], r[2]) for r in con.execute(
+            f"SELECT k, {knuth_hash_sql('k')}, {knuth_hash_sql('k')} % 10 "
+            f"FROM (VALUES {values}) t(k)").fetchall()}
+        for k in big:
+            with pytest.raises(duckdb.Error, match="Overflow"):
+                con.execute(f"SELECT ({k}::BIGINT * 2654435761) % 4294967296")
+    assert got_spark == want
+    assert got_duck == want
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for k in big:
+            one = keys_df.where(F.col("k") == k)
+            with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+                one.select(F.col("k") * 2654435761 % 4294967296).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_knuth_constant_lives_only_in_the_kernel():
+    """One definition: the Knuth multiplier appears once in the package
+    source, in hashing.py, and no module defines its own *KNUTH* name."""
+    import pathlib
+    import re
+
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "recommendation_system_spark_ml_spark")
+    hits, defs = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for line in path.read_text().splitlines():
+            hits += [rel] * line.count("2654435761")
+            if re.match(r"\s*\w*KNUTH\w*\s*=[^=]", line):
+                defs.append(rel)
+    assert hits == ["hashing.py"]
+    assert defs == ["hashing.py"]
 
 
 def _plan(df) -> str:

@@ -343,16 +343,16 @@ def test_dup_sample_estimate_ci_and_exactness(spark):
     """The sampled estimator must reproduce hand-computed sample/corpus
     counts from the same Knuth gate, its CI must contain p_hat, and
     its Wald width must match the formula."""
+    from recommendation_system_spark_ml_spark.hashing import KNUTH
     from recommendation_system_spark_ml_spark.operators.dedup import (
-        SAMPLE_BUCKETS, SAMPLE_KEEP, _KNUTH_SAMPLE,
-        pipeline_dedup_sample_estimate)
+        SAMPLE_BUCKETS, SAMPLE_KEEP, pipeline_dedup_sample_estimate)
     from recommendation_system_spark_ml_spark.sources.catalog import load
 
     row = pipeline_dedup_sample_estimate(spark, SF_SMOKE).first()
     docs = load(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
     import hashlib
     samp = [d for d in docs
-            if (d.doc_id * _KNUTH_SAMPLE) % 4294967296 % SAMPLE_BUCKETS
+            if (d.doc_id * KNUTH) % 4294967296 % SAMPLE_BUCKETS
             < SAMPLE_KEEP]
     fp = lambda t: hashlib.sha256(t.encode()).hexdigest()  # noqa: E731
     m, dups = len(samp), len(samp) - len({fp(d.text) for d in samp})

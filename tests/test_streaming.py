@@ -309,14 +309,15 @@ def test_incremental_dedup_first_seen_wins_across_batches(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from recommendation_system_spark_ml_spark.hashing import KNUTH
     from recommendation_system_spark_ml_spark.streaming.incremental import (
-        _KNUTH, dedup_ingest_batch)
+        dedup_ingest_batch)
 
     # synthetic docs, ids chosen to be in the streamed (NOT in_corpus)
     # Knuth partition; text bags: A == C (cross-batch dup, C has the
     # LOWER id), B unique, D == B (cross-batch dup within stream)
     def streamed(doc_id):
-        return not ((doc_id * _KNUTH) % 4294967296 % 10 < 9)
+        return not ((doc_id * KNUTH) % 4294967296 % 10 < 9)
 
     ids = [i for i in range(1, 400) if streamed(i)]
     a, b2, c, d = ids[10], ids[11], ids[2], ids[12]  # c < a

@@ -23,8 +23,9 @@ sys.path.insert(0, os.path.join(_ROOT, "tests"))
 import duckdb
 import pyarrow as pa, pyarrow.parquet as pq
 from pyspark.sql import SparkSession
+from recommendation_system_spark_ml_spark.session import default_driver_memory
 spark = (SparkSession.builder.master("local[8]")
-         .config("spark.driver.memory", "24g")
+         .config("spark.driver.memory", default_driver_memory())
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from tests.conftest import assert_df_matches
