@@ -81,6 +81,8 @@ def kmeans_sweep(feats: DataFrame, ks=range(2, 11)) -> list[tuple[int, float]]:
     summary.trainingCost (JVM-side, no Python row maps)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     def fit(k: int) -> tuple[int, float]:
         return k, float(KMeans(k=k, seed=SEED).fit(feats).summary.trainingCost)
 
@@ -90,10 +92,12 @@ def kmeans_sweep(feats: DataFrame, ks=range(2, 11)) -> list[tuple[int, float]]:
     # scheduler with one thread per k; each fit is itself a multi-job
     # chain with idle gaps the scheduler fills from the other fits.
     # Purely scheduling -- seeded fits are layout-pinned by the caller,
-    # so concurrency cannot change SSE.
+    # so concurrency cannot change SSE. The wrapped target carries the
+    # caller's job group and local properties into the pool threads.
     ks = list(ks)
     with ThreadPoolExecutor(max_workers=max(1, min(len(ks), 16))) as pool:
-        return sorted(pool.map(fit, ks))
+        return sorted(pool.map(
+            inheritable_thread_target(feats.sparkSession)(fit), ks))
 
 
 from collections import OrderedDict
@@ -835,8 +839,10 @@ def ml_movielens_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             als_model.transform(test.select("userId", "movieId", "rating"))))
 
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
     with ThreadPoolExecutor(max_workers=1) as pool:
-        als_fut = pool.submit(als_branch)
+        als_fut = pool.submit(inheritable_thread_target(spark)(als_branch))
         train_rmse = rmse_of(train)
         test_rmse = rmse_of(test)
         als_rmse = als_fut.result()

@@ -11,9 +11,10 @@ bag-of-words-identical -- so the family splits naturally:
 - n-gram Jaccard: token-blocked self-join -- only pairs sharing a
   token are generated (the standard candidate-pruning trick);
 - MinHash LSH: word set -> seeded xxhash64 minhash signature ->
-  banded bucket join -> exact Jaccard on candidates only;
-- SimHash: 64-bit sign-sum fingerprint via xxhash64, banded for
-  blocking;
+  banded candidates (banding.py's band_pairs) -> exact Jaccard on
+  candidates only;
+- SimHash: 64-bit sign-sum fingerprint via xxhash64; the md5 twin
+  bands it through the same band_pairs core;
 - embedding cosine: brute-force pair join above a cosine threshold.
 
 100 TB posture: every pairwise operator here blocks before it joins
@@ -26,10 +27,12 @@ for the LSH path, not the scale path (see similarity.py's IVF).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.banding import (
+    band_pairs, band_pairs_sql)
 from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
@@ -44,12 +47,21 @@ def _words(col: str = "text"):
     return F.split(F.lower(F.col(col)), r"\s+")
 
 
+def _word_sets(docs: DataFrame, *carry: Column) -> DataFrame:
+    """(doc_id, words, *carry): each document's distinct non-empty
+    words, documents without any dropped."""
+    return (docs.select("doc_id",
+                        F.array_distinct(F.filter(_words(), lambda w: w != ""))
+                        .alias("words"), *carry)
+            .where(F.size("words") > 0))
+
+
 DD_CHECK_N = 50  # fixed probe slice for the hashable dedup contracts
 
 # Static oracle-side glob for the persisted realistic corpus (see
 # sources/realistic.py: fixed shared path + src_n selects the sf).
 from recommendation_system_spark_ml_spark.sources.realistic import (  # noqa: E402
-    DOCS_ORACLE_GLOB as _REALISTIC_DOCS_GLOB,
+    DOCS_ORACLE_GLOB as _REALISTIC_DOCS_GLOB, realistic_documents,
 )
 
 
@@ -146,10 +158,10 @@ def dedup_simhash_fingerprints(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """64-bit SimHash per document: xxhash64 each distinct word, sum
     +1/-1 per bit position over the doc, sign -> bit. Shuffle-dups get
-    identical fingerprints (the word *set* is preserved). Emitted with
-    4x16-bit bands: candidate pairs at scale join on (band_id, band
-    value) -- Hamming distance <= 3 guarantees at least one exact band
-    match (pigeonhole)."""
+    identical fingerprints (the word *set* is preserved). Candidate
+    pairs at scale come from 4x16-bit bands through banding.py's
+    band_pairs (dedup_simhash_checked) -- Hamming distance <= 3
+    guarantees at least one exact band match (pigeonhole)."""
     pin_session_conf(spark)
     docs = load(spark, sf_dir, "documents")
     tok = (docs.select("doc_id", F.explode(_words()).alias("w"))
@@ -167,12 +179,7 @@ def dedup_simhash_fingerprints(spark: SparkSession,
                      F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         term = F.shiftleft(bit, i)
         simhash = term if simhash is None else simhash.bitwiseXOR(term)
-    out = per_doc.select("doc_id", simhash.alias("simhash"))
-    for band in range(4):
-        out = out.withColumn(
-            f"band{band}",
-            F.shiftright(F.col("simhash"), band * 16).bitwiseAND(F.lit(0xFFFF)))
-    return out
+    return per_doc.select("doc_id", simhash.alias("simhash"))
 
 
 @register("dedup_simhash", oracle=f"""
@@ -223,8 +230,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (F.broadcast(q).crossJoin(c)
              .groupBy(F.col("qid").alias("doc_id"))
              .agg(F.sum(dup_hit).alias("n_set_dups")))
-    fp = dedup_simhash_fingerprints(spark, sf_dir).select(
-        "doc_id", "simhash")
+    fp = dedup_simhash_fingerprints(spark, sf_dir)
     same_fp = (fp.where(F.col("doc_id") < DD_CHECK_N)
                .select(F.col("doc_id").alias("qdoc"),
                        F.col("simhash").alias("qfp"))
@@ -303,10 +309,9 @@ def dedup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_pairs(base: DataFrame) -> DataFrame:
-    """Banded MinHash LSH >= 0.8-set-Jaccard pairs over (doc_id,
-    words) -- the shared engine behind dedup_minhash (driver corpus)
-    and dedup_minhash_realistic (long-tail corpus). See
-    dedup_minhash's docstring for the design rationale."""
+    """Banded MinHash LSH >= 0.8-set-Jaccard pairs over _word_sets
+    rows -- the engine behind dedup_minhash_pairs and
+    dedup_minhash_realistic_pairs (see the former's docstring)."""
     n_hashes, n_bands, rows_per_band = 16, 4, 4
 
     # NOTE: the hash factory must return a ONE-parameter lambda.
@@ -327,22 +332,10 @@ def _minhash_pairs(base: DataFrame) -> DataFrame:
                  F.xxhash64(*[F.col(f"mh{j * rows_per_band + r}")
                               for r in range(rows_per_band)]).alias("key"))
         for j in range(n_bands)])
-    # r11 (guide §5): buckets feeds both sides of the bucket
-    # self-join, so the full signature stage (per-doc seeded-hash
-    # array folds) previously ran TWICE; the checkpointed table is
-    # (doc_id, band, key) -- a few dozen bytes x n_bands per doc,
-    # never payload-sized.
     buckets = (sig.select("doc_id", F.explode(bands).alias("b"))
                .select("doc_id", F.col("b.band").alias("band"),
-                       F.col("b.key").alias("key"))
-               .localCheckpoint(eager=True))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
+                       F.col("b.key").alias("key")))
+    cand = band_pairs(buckets, "doc_id", ("doc_a", "doc_b"))
     wa = base.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wa"))
     wb = base.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("wb"))
     jac = (F.size(F.array_intersect("wa", "wb")).cast("double")
@@ -356,8 +349,8 @@ def _minhash_pairs(base: DataFrame) -> DataFrame:
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH near-dup pairs, expression-native: word set -> 16
     minhashes (xxhash64 under 16 seeds) -> 4 bands x 4 rows -> bucket
-    join on (band, band_key) -> exact Jaccard ONLY on candidates,
-    keep distance <= 0.2.
+    join on (band, band_key) (banding.py) -> exact Jaccard ONLY on
+    candidates, keep distance <= 0.2.
 
     Why not MLlib approxSimilarityJoin: its self-join explodes hash
     tables inside a plan we can't partition, and at sf0.1 AQE
@@ -383,21 +376,29 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of true-positive volume; this saturated-corpus form stays
     registered for the exhaustive-twin comparison."""
     pin_session_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    base = (docs.select("doc_id",
-                        F.array_distinct(F.filter(_words(), lambda w: w != ""))
-                        .alias("words"))
-            .where(F.size("words") > 0))
-    return _minhash_pairs(base)
+    return _minhash_pairs(_word_sets(load(spark, sf_dir, "documents")))
 
 
+def dedup_minhash_realistic_pairs(spark: SparkSession,
+                                  sf_dir: str) -> DataFrame:
+    """The production banded-MinHash edge list over the realistic
+    long-tail corpus (sources/realistic.py) -- the pair-producing face
+    the recall-gate tests score against planted twins; the registered
+    contract dedup_minhash_realistic executes it in full."""
+    pin_session_conf(spark)
+    return _minhash_pairs(_word_sets(realistic_documents(spark, sf_dir)))
 
-@register("dedup_minhash", oracle=f"""
+
+def _minhash_contract_oracle(docs_sql: str) -> str:
+    """The exact side of the MinHash probe contract: each probe doc's
+    near-dup and identical-set partner counts by exhaustive scan over
+    `docs_sql` (a relation yielding doc_id, text)."""
+    return f"""
 WITH w AS (
     SELECT doc_id,
            list_sort(list_distinct(list_filter(
                string_split(lower(text), ' '), x -> x <> ''))) AS ws
-    FROM documents WHERE text IS NOT NULL
+    FROM {docs_sql} WHERE text IS NOT NULL
 ), nz AS (SELECT * FROM w WHERE len(ws) > 0),
 q AS (SELECT * FROM nz WHERE doc_id < {DD_CHECK_N})
 SELECT q.doc_id,
@@ -412,17 +413,19 @@ SELECT q.doc_id,
        TRUE AS dups_complete
 FROM q, nz c
 GROUP BY q.doc_id
-""")
-def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashable agreement contract over dedup_minhash_pairs (the
-    sim_lsh r7 promotion pattern; r7 verdict task 4): for each of a
-    FIXED DD_CHECK_N=50-doc probe slice the oracle computes, by
-    exhaustive scan, (a) the exact count of set-Jaccard >= 0.8
-    partners (round-4 distance <= 0.2, the pipeline's own acceptance
-    expression -- integer intersection / union sizes, so the double
-    quotient is bit-identical cross-engine) and (b) the exact count
-    of IDENTICAL-word-set partners. Two contract booleans, both
-    guaranteed by construction on any input:
+"""
+
+
+def _minhash_contract(docs: DataFrame) -> DataFrame:
+    """Hashable agreement contract over the banded MinHash pair list
+    of `docs` (the sim_lsh r7 promotion pattern; r7 verdict task 4):
+    for each of a FIXED DD_CHECK_N=50-doc probe slice the oracle
+    computes, by exhaustive scan, (a) the exact count of set-Jaccard
+    >= 0.8 partners (round-4 distance <= 0.2, the pipeline's own
+    acceptance expression -- integer intersection / union sizes, so
+    the double quotient is bit-identical cross-engine) and (b) the
+    exact count of IDENTICAL-word-set partners. Two contract
+    booleans, both guaranteed by construction on any input:
 
     - minhash_le_exact: the pipeline's emitted partners per probe doc
       never exceed (a) -- every emitted pair passed the IDENTICAL
@@ -438,10 +441,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Banded recall on 0.8-Jaccard NEAR-dups (dataset-conditional,
     P(candidate) ~ 0.88 at these band parameters) stays in the local
     recall-gate tests -- the r6 HLL lesson: never pin a statistical
-    bound in a hash. The production edge-list API is
-    dedup_minhash_pairs, which this contract executes in full."""
-    pin_session_conf(spark)
-    docs = load(spark, sf_dir, "documents")
+    bound in a hash. The exact side is DD_CHECK_N broadcast probe
+    rows x corpus -- linear; the pair side is the production pipeline,
+    executed in full."""
     base = (docs.select("doc_id",
                         F.sort_array(F.array_distinct(
                             F.filter(_words(), lambda w: w != "")))
@@ -460,7 +462,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy(F.col("qid").alias("doc_id"))
              .agg(F.sum(nd_hit).alias("n_exact_nd"),
                   F.sum(dup_hit).alias("n_exact_dups")))
-    pairs = dedup_minhash_pairs(spark, sf_dir)
+    pairs = _minhash_pairs(_word_sets(docs))
     touched = (pairs.select(F.col("doc_a").alias("doc_id"), "jaccard_dist")
                .unionAll(pairs.select(F.col("doc_b").alias("doc_id"),
                                       "jaccard_dist"))
@@ -477,109 +479,39 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                      == F.col("n_exact_dups")).alias("dups_complete")))
 
 
-def dedup_minhash_realistic_pairs(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """The production banded-MinHash edge list over the realistic
-    long-tail corpus (sources/realistic.py) -- the pair-producing face
-    the recall-gate tests score against planted twins; the registered
-    contract dedup_minhash_realistic executes it in full."""
+@register("dedup_minhash", oracle=_minhash_contract_oracle("documents"))
+def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The MinHash probe contract (_minhash_contract) over the
+    driver's `documents`, running dedup_minhash_pairs' pipeline in
+    full."""
     pin_session_conf(spark)
-    from recommendation_system_spark_ml_spark.sources.realistic import (
-        realistic_documents,
-    )
-    docs = realistic_documents(spark, sf_dir)
-    base = (docs.select("doc_id",
-                        F.array_distinct(F.filter(_words(), lambda w: w != ""))
-                        .alias("words"))
-            .where(F.size("words") > 0))
-    return _minhash_pairs(base)
+    return _minhash_contract(load(spark, sf_dir, "documents"))
 
 
-@register("dedup_minhash_realistic", bench=True, oracle=f"""
-WITH rd AS (
+@register("dedup_minhash_realistic", bench=True,
+          oracle=_minhash_contract_oracle(f"""(
     SELECT doc_id, text FROM read_parquet('{_REALISTIC_DOCS_GLOB}')
     WHERE src_n = (SELECT count(*) FROM documents)
-), w AS (
-    SELECT doc_id,
-           list_sort(list_distinct(list_filter(
-               string_split(lower(text), ' '), x -> x <> ''))) AS ws
-    FROM rd WHERE text IS NOT NULL
-), nz AS (SELECT * FROM w WHERE len(ws) > 0),
-q AS (SELECT * FROM nz WHERE doc_id < {DD_CHECK_N})
-SELECT q.doc_id,
-       CAST(sum(CASE WHEN c.doc_id <> q.doc_id
-                      AND round(1.0 - len(list_intersect(q.ws, c.ws)) * 1.0
-                            / len(list_distinct(list_concat(q.ws, c.ws))), 4)
-                          <= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_exact_nd,
-       CAST(sum(CASE WHEN c.doc_id <> q.doc_id AND q.ws = c.ws
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_dups,
-       TRUE AS minhash_le_exact,
-       TRUE AS dups_complete
-FROM q, nz c
-GROUP BY q.doc_id
-""")
+) rd"""))
 def dedup_minhash_realistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_minhash over the realistic-similarity corpus
-    (sources/realistic.py: log-uniform long-tail vocabulary ~50x the
-    doc count, ~1% planted near-dup twins at set-Jaccard ~0.9,
-    background pair Jaccard ~0.08). This is the headline-bench slot
-    for MinHash LSH since r5 (r4 verdict Next #4): on the driver's
-    saturated 31-word-vocabulary corpus ~23% of ALL pairs are true
-    positives, so wall time there measures output volume -- here the
-    dup rate is realistic and the number moves when banding/bucketing
-    efficiency moves.
+    """The MinHash probe contract (_minhash_contract) over the
+    realistic-similarity corpus (sources/realistic.py: log-uniform
+    long-tail vocabulary ~50x the doc count, ~1% planted near-dup
+    twins at set-Jaccard ~0.9, background pair Jaccard ~0.08). This is
+    the headline-bench slot for MinHash LSH since r5 (r4 verdict Next
+    #4): on the driver's saturated 31-word-vocabulary corpus ~23% of
+    ALL pairs are true positives, so wall time there measures output
+    volume -- here the dup rate is realistic and the number moves when
+    banding/bucketing efficiency moves.
 
     HASH-VERIFIED since r10 (r9 verdict task 1): the derived corpus is
     persisted at a fixed shared path the DuckDB oracle reads through a
-    static read_parquet glob (src_n picks the sf under comparison), so
-    the same DD_CHECK_N-probe agreement contract as dedup_minhash
-    applies verbatim -- the oracle exhaustively counts each probe
-    doc's exact set-Jaccard >= 0.8 partners and identical-set
-    partners; the contract booleans (emitted pairs are a SUBSET of the
-    exact set; distance-0 dups are COMPLETE) are guaranteed by
-    construction on any input. Banded recall on near-dups stays in
-    the planted-twin gate (tests/test_similarity_dedup.py), which
-    scores dedup_minhash_realistic_pairs directly. The exact side is
-    {DD_CHECK_N} broadcast probe rows x corpus -- linear."""
+    static read_parquet glob (src_n picks the sf under comparison).
+    Banded recall on near-dups stays in the planted-twin gate
+    (tests/test_similarity_dedup.py), which scores
+    dedup_minhash_realistic_pairs directly."""
     pin_session_conf(spark)
-    from recommendation_system_spark_ml_spark.sources.realistic import (
-        realistic_documents,
-    )
-    docs = realistic_documents(spark, sf_dir)
-    base = (docs.select("doc_id",
-                        F.sort_array(F.array_distinct(
-                            F.filter(_words(), lambda w: w != "")))
-                        .alias("ws"))
-            .where(F.size("ws") > 0))
-    q = (base.where(F.col("doc_id") < DD_CHECK_N)
-         .select(F.col("doc_id").alias("qid"), F.col("ws").alias("qws")))
-    c = base.select(F.col("doc_id").alias("cid"), F.col("ws").alias("cws"))
-    i_ = F.size(F.array_intersect("qws", "cws")).cast("double")
-    u_ = F.size(F.array_union("qws", "cws"))
-    jd = F.round(1.0 - i_ / u_, 4)
-    nd_hit = ((F.col("cid") != F.col("qid")) & (jd <= 0.2)).cast("long")
-    dup_hit = ((F.col("cid") != F.col("qid"))
-               & (F.col("qws") == F.col("cws"))).cast("long")
-    exact = (F.broadcast(q).crossJoin(c)
-             .groupBy(F.col("qid").alias("doc_id"))
-             .agg(F.sum(nd_hit).alias("n_exact_nd"),
-                  F.sum(dup_hit).alias("n_exact_dups")))
-    pairs = dedup_minhash_realistic_pairs(spark, sf_dir)
-    touched = (pairs.select(F.col("doc_a").alias("doc_id"), "jaccard_dist")
-               .unionAll(pairs.select(F.col("doc_b").alias("doc_id"),
-                                      "jaccard_dist"))
-               .where(F.col("doc_id") < DD_CHECK_N)
-               .groupBy("doc_id")
-               .agg(F.count(F.lit(1)).alias("n_mh"),
-                    F.sum((F.col("jaccard_dist") == 0.0).cast("long"))
-                    .alias("n_mh_dup")))
-    return (exact.join(touched, "doc_id", "left")
-            .select("doc_id", "n_exact_nd", "n_exact_dups",
-                    (F.coalesce(F.col("n_mh"), F.lit(0))
-                     <= F.col("n_exact_nd")).alias("minhash_le_exact"),
-                    (F.coalesce(F.col("n_mh_dup"), F.lit(0))
-                     == F.col("n_exact_dups")).alias("dups_complete")))
+    return _minhash_contract(realistic_documents(spark, sf_dir))
 
 
 @register("dedup_embedding", oracle="""
@@ -704,9 +636,6 @@ def dedup_jaccard_prefix_realistic(spark: SparkSession,
     Planted-twin recall stays additionally gated in
     tests/test_similarity_dedup.py."""
     pin_session_conf(spark)
-    from recommendation_system_spark_ml_spark.sources.realistic import (
-        realistic_documents,
-    )
     return _jaccard_prefix_pairs(realistic_documents(spark, sf_dir))
 
 
@@ -1378,18 +1307,89 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 MHC_HASHES, MHC_BANDS, MHC_ROWS = 16, 4, 4
 
 
-def _minhash_checked_oracle() -> str:
-    """The ENTIRE LSH pipeline -- seeded minhash signatures, banded
-    bucket keys, candidate generation, exact verification -- unrolled
-    as DuckDB SQL, so every stage is hash-checked value-for-value."""
+def _md5_band_rows(base: DataFrame) -> DataFrame:
+    """(doc_id, band, key) rows of the md5-seeded MinHash signature of
+    _word_sets rows: mh_i = min over words of md5('i:' || word), band j
+    keyed by md5 of its MHC_ROWS concatenated minhashes. Shared by
+    dedup_minhash_checked and dedup_minhash_incremental; the DuckDB
+    twin is _md5_band_rows_sql."""
+    # one-parameter lambda via factory: a two-parameter form would bind
+    # the seed to transform's array-index argument (see _minhash_pairs)
+    def seeded(i):
+        return lambda w: F.md5(F.concat(F.lit(f"{i}:"), w))
+
+    mh = [F.array_min(F.transform("words", seeded(i))).alias(f"mh{i}")
+          for i in range(MHC_HASHES)]
+    sig = base.select("doc_id", *mh)
+    bands = F.array(*[
+        F.struct(F.lit(j).alias("band"),
+                 F.md5(F.concat(*[F.col(f"mh{j * MHC_ROWS + r}")
+                                  for r in range(MHC_ROWS)])).alias("key"))
+        for j in range(MHC_BANDS)])
+    return (sig.select("doc_id", F.explode(bands).alias("b"))
+            .select("doc_id", F.col("b.band").alias("band"),
+                    F.col("b.key").alias("key")))
+
+
+def _md5_band_rows_sql(*carry: str) -> str:
+    """_md5_band_rows as DuckDB CTEs `sig` and `buckets` over a `base`
+    CTE of (doc_id, words, *carry); buckets keep the carry columns."""
+    keep = "".join(f"{c}, " for c in carry)
     mh_cols = ",\n           ".join(
         f"list_min(list_transform(words, w -> md5('{i}:' || w))) AS mh{i}"
         for i in range(MHC_HASHES))
     band_rows = "\n    UNION ALL ".join(
-        "SELECT doc_id, {j} AS band, md5({cat}) AS key FROM sig".format(
-            j=j, cat=" || ".join(f"mh{j * MHC_ROWS + r}"
-                                 for r in range(MHC_ROWS)))
+        "SELECT doc_id, {keep}{j} AS band, md5({cat}) AS key FROM sig"
+        .format(keep=keep, j=j, cat=" || ".join(
+            f"mh{j * MHC_ROWS + r}" for r in range(MHC_ROWS)))
         for j in range(MHC_BANDS))
+    return f"""sig AS (
+    SELECT doc_id, {keep}
+           {mh_cols}
+    FROM base
+), buckets AS (
+    {band_rows}
+)"""
+
+
+def _jaccard_verified(cand: DataFrame, base: DataFrame) -> DataFrame:
+    """Exact set-Jaccard >= 0.8 verify of the (id_a, id_b) pairs in
+    `cand` against _word_sets rows: the INTEGER keep 5*|intersect| >=
+    4*|union| (no float-tie surface) and a floor-quantized 4-decimal
+    distance, identical to _jaccard_verified_sql."""
+    ca, cb = cand.columns
+    wa = base.select(F.col("doc_id").alias(ca), F.col("words").alias("wa"))
+    wb = base.select(F.col("doc_id").alias(cb), F.col("words").alias("wb"))
+    i_ = F.size(F.array_intersect("wa", "wb"))
+    u_ = F.size(F.array_union("wa", "wb"))
+    return (cand.join(wa, ca).join(wb, cb)
+            .where(5 * i_ >= 4 * u_)
+            .select(ca, cb,
+                    (F.floor((1.0 - i_ * 1.0 / u_) * 10000 + 0.5) / 10000)
+                    .alias("jaccard_dist")))
+
+
+def _jaccard_verified_sql(ca: str, cb: str) -> str:
+    """_jaccard_verified as DuckDB: a `verified` CTE over the `cand`
+    (ca, cb) and `base` CTEs, then the final SELECT."""
+    return f"""verified AS (
+    SELECT c.{ca}, c.{cb},
+           len(list_intersect(wa.words, wb.words)) AS i,
+           len(list_distinct(wa.words || wb.words)) AS u
+    FROM cand c
+    JOIN base wa ON wa.doc_id = c.{ca}
+    JOIN base wb ON wb.doc_id = c.{cb}
+)
+SELECT {ca}, {cb},
+       floor((1.0 - i * 1.0 / u) * 10000 + 0.5) / 10000 AS jaccard_dist
+FROM verified WHERE 5 * i >= 4 * u
+"""
+
+
+def _minhash_checked_oracle() -> str:
+    """The ENTIRE LSH pipeline -- seeded minhash signatures, banded
+    bucket keys, candidate generation, exact verification -- unrolled
+    as DuckDB SQL, so every stage is hash-checked value-for-value."""
     return f"""
 WITH base AS (
     SELECT doc_id,
@@ -1397,28 +1397,9 @@ WITH base AS (
                                      w -> w <> '')) AS words
     FROM documents
     WHERE len(list_filter(string_split(lower(text), ' '), w -> w <> '')) > 0
-), sig AS (
-    SELECT doc_id,
-           {mh_cols}
-    FROM base
-), buckets AS (
-    {band_rows}
-), cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM buckets a JOIN buckets b
-      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-), verified AS (
-    SELECT c.doc_a, c.doc_b,
-           len(list_intersect(wa.words, wb.words)) AS i,
-           len(list_distinct(wa.words || wb.words)) AS u
-    FROM cand c
-    JOIN base wa ON wa.doc_id = c.doc_a
-    JOIN base wb ON wb.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b,
-       floor((1.0 - i * 1.0 / u) * 10000 + 0.5) / 10000 AS jaccard_dist
-FROM verified WHERE 5 * i >= 4 * u
-"""
+), {_md5_band_rows_sql()}, cand AS (
+    {band_pairs_sql("buckets", "doc_id", ("doc_a", "doc_b"))}
+), {_jaccard_verified_sql("doc_a", "doc_b")}"""
 
 
 @register("dedup_minhash_checked", oracle=_minhash_checked_oracle())
@@ -1435,58 +1416,13 @@ def dedup_minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verified output all hash-match the DuckDB oracle (the same
     move that made agg_kmv_jaccard's sketch checkable). The xxhash64
     variant stays the production/bench path -- JVM-side 64-bit mixing
-    beats hex-string md5 -- but every structural stage is shared, so
-    this query certifies the LSH logic the fast path runs.
-
-    The >= 0.8 set-Jaccard keep is the INTEGER comparison
-    5*|intersect| >= 4*|union| (no float-tie surface); the reported
-    distance is floor-quantized to 4 decimals identically on both
-    sides. Scale shape is dedup_minhash's: the bucket join carries
-    (band, key, doc_id) only, word arrays join back for survivors."""
+    beats hex-string md5 -- but the candidate stage is the same
+    banding.py core, so this query certifies the LSH logic the fast
+    path runs. The verify is _jaccard_verified's integer keep."""
     pin_session_conf(spark)
-    docs = load(spark, sf_dir, "documents")
-    base = (docs.select("doc_id",
-                        F.array_distinct(F.filter(_words(), lambda w: w != ""))
-                        .alias("words"))
-            .where(F.size("words") > 0))
-    # one-parameter lambda via factory: a two-parameter form would bind
-    # the seed to transform's array-index argument (see dedup_minhash)
-    def seeded(i):
-        return lambda w: F.md5(F.concat(F.lit(f"{i}:"), w))
-
-    mh = [F.array_min(F.transform("words", seeded(i))).alias(f"mh{i}")
-          for i in range(MHC_HASHES)]
-    sig = base.select("doc_id", *mh)
-    bands = F.array(*[
-        F.struct(F.lit(j).alias("band"),
-                 F.md5(F.concat(*[F.col(f"mh{j * MHC_ROWS + r}")
-                                  for r in range(MHC_ROWS)])).alias("key"))
-        for j in range(MHC_BANDS)])
-    # r11 (guide §5): buckets feeds both sides of the bucket
-    # self-join, so the full signature stage (per-doc seeded-hash
-    # array folds) previously ran TWICE; the checkpointed table is
-    # (doc_id, band, key) -- a few dozen bytes x n_bands per doc,
-    # never payload-sized.
-    buckets = (sig.select("doc_id", F.explode(bands).alias("b"))
-               .select("doc_id", F.col("b.band").alias("band"),
-                       F.col("b.key").alias("key"))
-               .localCheckpoint(eager=True))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-    wa = base.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("wa"))
-    wb = base.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("wb"))
-    i_ = F.size(F.array_intersect("wa", "wb"))
-    u_ = F.size(F.array_union("wa", "wb"))
-    return (cand.join(wa, "doc_a").join(wb, "doc_b")
-            .where(5 * i_ >= 4 * u_)
-            .select("doc_a", "doc_b",
-                    (F.floor((1.0 - i_ * 1.0 / u_) * 10000 + 0.5) / 10000)
-                    .alias("jaccard_dist")))
+    base = _word_sets(load(spark, sf_dir, "documents"))
+    cand = band_pairs(_md5_band_rows(base), "doc_id", ("doc_a", "doc_b"))
+    return _jaccard_verified(cand, base)
 
 
 def _simhash_checked_oracle() -> str:
@@ -1495,7 +1431,7 @@ def _simhash_checked_oracle() -> str:
     alphabet, integer div/mod) -- no engine-specific 64-bit hash, so
     signatures, band keys, candidates, and Hamming distances are all
     byte-identical across engines."""
-    return """
+    return f"""
 WITH base AS (
     SELECT doc_id,
            list_distinct(list_filter(string_split(lower(text), ' '),
@@ -1520,9 +1456,7 @@ WITH base AS (
     SELECT doc_id, b AS band, substr(fp, 1 + 16 * b, 16) AS key, fp
     FROM fp, LATERAL (SELECT unnest(range(0, 4)) AS b) t
 ), cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM buckets a JOIN buckets b
-      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
+    {band_pairs_sql("buckets", "doc_id", ("doc_a", "doc_b"))}
 ), ham AS (
     SELECT c.doc_a, c.doc_b,
            CAST(len(list_filter(range(1, 65), p ->
@@ -1554,9 +1488,11 @@ def dedup_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     +/-1 sums are map-side-combinable aggregates (the first version
     computed the same bits as a triple-nested HOF lambda: interpreted,
     measured 33 s at sf0.1 vs ~4 s for this shape -- SCALE.md's
-    Catalyst-HOFs-never-codegen pitfall). The band join carries
-    (band, 16-char key, doc_id); fingerprints join back only for
-    surviving candidates."""
+    Catalyst-HOFs-never-codegen pitfall). The band join is banding.py's
+    band_pairs over (doc_id, k0..k3, band, 16-bit key) rows: the four
+    band ints ride along as payload, so the exact Hamming verify is its
+    keep predicate and the distance its extra column -- no fingerprint
+    join-back."""
     pin_session_conf(spark)
     docs = load(spark, sf_dir, "documents")
     tok = (docs.select("doc_id", F.explode(_words()).alias("w"))
@@ -1588,31 +1524,23 @@ def dedup_simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = acc + x
         return acc.cast("long")
 
+    ks = [f"k{j}" for j in range(4)]
     fp = per_doc.select("doc_id",
-                        *[band_int(j).alias(f"k{j}") for j in range(4)])
+                        *[band_int(j).alias(k) for j, k in enumerate(ks)])
     bands = F.array(*[
-        F.struct(F.lit(j).alias("band"), F.col(f"k{j}").alias("key"))
-        for j in range(4)])
-    buckets = (fp.select("doc_id", F.explode(bands).alias("b"))
-               .select("doc_id", F.col("b.band").alias("band"),
+        F.struct(F.lit(j).alias("band"), F.col(k).alias("key"))
+        for j, k in enumerate(ks)])
+    buckets = (fp.select("doc_id", *ks, F.explode(bands).alias("b"))
+               .select("doc_id", *ks, F.col("b.band").alias("band"),
                        F.col("b.key").alias("key")))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-    fa = fp.select(F.col("doc_id").alias("doc_a"),
-                   *[F.col(f"k{j}").alias(f"ka{j}") for j in range(4)])
-    fb = fp.select(F.col("doc_id").alias("doc_b"),
-                   *[F.col(f"k{j}").alias(f"kb{j}") for j in range(4)])
-    hamming = sum(
-        (F.bit_count(F.col(f"ka{j}").bitwiseXOR(F.col(f"kb{j}")))
-         for j in range(4)), F.lit(0)).cast("int")
-    return (cand.join(fa, "doc_a").join(fb, "doc_b")
-            .select("doc_a", "doc_b", hamming.alias("hamming"))
-            .where(F.col("hamming") <= 3))
+
+    def hamming(a, b):
+        return sum((F.bit_count(a(k).bitwiseXOR(b(k))) for k in ks),
+                   F.lit(0)).cast("int")
+
+    return band_pairs(buckets, "doc_id", ("doc_a", "doc_b"),
+                      keep=lambda a, b: hamming(a, b) <= 3,
+                      extra=[("hamming", hamming)])
 
 
 @register("dedup_canonical", bench=True, oracle="""
@@ -1933,14 +1861,6 @@ def _minhash_incremental_oracle() -> str:
     verify -- certifying that probing the persisted band index equals
     recomputing everything, the invariant that lets the index be
     trusted across arrivals."""
-    mh_cols = ",\n           ".join(
-        f"list_min(list_transform(words, w -> md5('{i}:' || w))) AS mh{i}"
-        for i in range(MHC_HASHES))
-    band_rows = "\n    UNION ALL ".join(
-        "SELECT doc_id, in_corpus, {j} AS band, md5({cat}) AS key FROM sig"
-        .format(j=j, cat=" || ".join(f"mh{j * MHC_ROWS + r}"
-                                     for r in range(MHC_ROWS)))
-        for j in range(MHC_BANDS))
     return f"""
 WITH base AS (
     SELECT doc_id,
@@ -1949,13 +1869,7 @@ WITH base AS (
            {IN_CORPUS_SQL} AS in_corpus
     FROM documents
     WHERE len(list_filter(string_split(lower(text), ' '), w -> w <> '')) > 0
-), sig AS (
-    SELECT doc_id, in_corpus,
-           {mh_cols}
-    FROM base
-), buckets AS (
-    {band_rows}
-), hot AS (
+), {_md5_band_rows_sql("in_corpus")}, hot AS (
     SELECT band, key FROM buckets WHERE in_corpus
     GROUP BY 1, 2 HAVING count(*) > {MHI_MAX_BUCKET}
 ), cand AS (
@@ -1965,18 +1879,7 @@ WITH base AS (
      AND NOT b.in_corpus AND c.in_corpus
     WHERE NOT EXISTS (SELECT 1 FROM hot h
                       WHERE h.band = b.band AND h.key = b.key)
-), verified AS (
-    SELECT cd.batch_doc_id, cd.corpus_doc_id,
-           len(list_intersect(wb.words, wc.words)) AS i,
-           len(list_distinct(wb.words || wc.words)) AS u
-    FROM cand cd
-    JOIN base wb ON wb.doc_id = cd.batch_doc_id
-    JOIN base wc ON wc.doc_id = cd.corpus_doc_id
-)
-SELECT batch_doc_id, corpus_doc_id,
-       floor((1.0 - i * 1.0 / u) * 10000 + 0.5) / 10000 AS jaccard_dist
-FROM verified WHERE 5 * i >= 4 * u
-"""
+), {_jaccard_verified_sql("batch_doc_id", "corpus_doc_id")}"""
 
 
 @register("dedup_minhash_incremental", oracle=_minhash_incremental_oracle())
@@ -2004,34 +1907,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from recommendation_system_spark_ml_spark.session import scratch_path
 
-    docs = load(spark, sf_dir, "documents")
-    base = (docs.select(
-        "doc_id",
-        F.array_distinct(F.filter(_words(), lambda w: w != ""))
-        .alias("words"),
-        in_corpus().alias("in_corpus"))
-        .where(F.size("words") > 0))
-
-    def seeded(i):
-        return lambda w: F.md5(F.concat(F.lit(f"{i}:"), w))
-
-    def band_rows(side):
-        mh = [F.array_min(F.transform("words", seeded(i))).alias(f"mh{i}")
-              for i in range(MHC_HASHES)]
-        sig = side.select("doc_id", *mh)
-        bands = F.array(*[
-            F.struct(F.lit(j).alias("band"),
-                     F.md5(F.concat(*[F.col(f"mh{j * MHC_ROWS + r}")
-                                      for r in range(MHC_ROWS)]))
-                     .alias("key"))
-            for j in range(MHC_BANDS)])
-        return (sig.select("doc_id", F.explode(bands).alias("b"))
-                .select("doc_id", F.col("b.band").alias("band"),
-                        F.col("b.key").alias("key")))
-
+    base = _word_sets(load(spark, sf_dir, "documents"),
+                      in_corpus().alias("in_corpus"))
     index_path = scratch_path(sf_dir, "minhash_band_index")
     if not _os.path.exists(_os.path.join(index_path, "_SUCCESS")):
-        (band_rows(base.where("in_corpus"))
+        (_md5_band_rows(base.where("in_corpus"))
          .write.mode("overwrite").parquet(index_path))
     idx = (spark.read.parquet(index_path)
            .select(F.col("doc_id").alias("corpus_doc_id"), "band", "key"))
@@ -2046,23 +1926,13 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count(F.lit(1)).alias("n"))
            .where(F.col("n") > MHI_MAX_BUCKET)
            .select("band", "key"))
-    cand = (band_rows(base.where(~F.col("in_corpus")))
+    cand = (_md5_band_rows(base.where(~F.col("in_corpus")))
             .withColumnRenamed("doc_id", "batch_doc_id")
             .join(hot, ["band", "key"], "left_anti")
             .join(idx, ["band", "key"])
             .select("batch_doc_id", "corpus_doc_id")
             .dropDuplicates(["batch_doc_id", "corpus_doc_id"]))
-    wb = base.select(F.col("doc_id").alias("batch_doc_id"),
-                     F.col("words").alias("wb"))
-    wc = base.select(F.col("doc_id").alias("corpus_doc_id"),
-                     F.col("words").alias("wc"))
-    i_ = F.size(F.array_intersect("wb", "wc"))
-    u_ = F.size(F.array_union("wb", "wc"))
-    return (cand.join(wb, "batch_doc_id").join(wc, "corpus_doc_id")
-            .where(5 * i_ >= 4 * u_)
-            .select("batch_doc_id", "corpus_doc_id",
-                    (F.floor((1.0 - i_ * 1.0 / u_) * 10000 + 0.5) / 10000)
-                    .alias("jaccard_dist")))
+    return _jaccard_verified(cand, base)
 
 
 @register("dedup_cluster_size_dist", oracle="""

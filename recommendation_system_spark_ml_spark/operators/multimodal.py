@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recommendation_system_spark_ml_spark.banding import band_pairs
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import pin_session_conf
 from recommendation_system_spark_ml_spark.sources.catalog import load
@@ -369,9 +370,10 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Division of labor is the module's production contract: DECODE +
     pooling is Python (Arrow mapInPandas, one pass per payload; a real
     deployment swaps in PIL grayscale-resize without touching the
-    plan), while DEDUP is pure JVM -- candidates come from equi-joins
-    on (band, key) carrying 24 B/row, and the exact bit_count(xor)
-    check runs on candidates only.
+    plan), while DEDUP is pure JVM -- banding.py's band_pairs over
+    (doc_id, phash, band, key) rows, with the exact bit_count(xor)
+    radius check as its keep predicate and the distance as an extra
+    pair column.
 
     Oracle-backed (r6 promotion): with 8 x 8-bit bands the pigeonhole
     guarantee covers radius 7 (>= PHASH_RADIUS: 6 differing bits can
@@ -420,17 +422,14 @@ def multimodal_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("doc_id", "phash",
                        F.col("bk.band").alias("band"),
                        F.col("bk.key").alias("key")))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    hamming = F.bit_count(
-        F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .where(hamming <= PHASH_RADIUS)
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    hamming.cast("int").alias("hamming"))
-            .dropDuplicates(["doc_a", "doc_b"]))
+
+    def hamming(a, b):
+        return F.bit_count(a("phash").bitwiseXOR(b("phash")))
+
+    return band_pairs(
+        buckets, "doc_id", ("doc_a", "doc_b"),
+        keep=lambda a, b: hamming(a, b) <= PHASH_RADIUS,
+        extra=[("hamming", lambda a, b: hamming(a, b).cast("int"))])
 
 
 AUDIO_WIN = 64   # frame length in samples (bytes of the fake PCM)

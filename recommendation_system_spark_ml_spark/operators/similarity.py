@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from recommendation_system_spark_ml_spark.banding import band_pairs
 from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
@@ -175,12 +176,14 @@ def sim_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
        nesting the dot inside transform() over a planes array drops
        to interpreted lambda-in-lambda evaluation, ~40x slower than
        the join.);
-    2. bits pack into L=32 tables x b=6-bit bucket keys; candidates
-       join on (table, key) -- the shuffle carries (table, key,
-       vec_id, 3 packed sign longs) = ~40 B/row, never the vectors;
-    3. Hamming pre-filter ON THE PACKED BITS (xor + bit_count):
-       agreement >= 115/192 ~ estimated cosine >= 0.3 -- kills ~99.7%
-       of random-pair candidates before anything row-sized joins;
+    2. bits pack into L tables x b-bit bucket keys, and banding.py's
+       band_pairs turns shared (table, key) buckets into candidate
+       pairs -- the shuffle carries (table, key, vec_id, 3 packed sign
+       longs) = ~40 B/row, never the vectors;
+    3. Hamming pre-filter ON THE PACKED BITS (xor + bit_count, the
+       band join's keep predicate): agreement >= 115/192 ~ estimated
+       cosine >= 0.3 -- kills ~99.7% of random-pair candidates before
+       anything row-sized joins;
     4. exact cosine re-rank: only the surviving pairs join the real
        vectors back; the returned `cosine` is exact, not estimated.
 
@@ -229,7 +232,11 @@ def lsh_pairs_over(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     borderline-0.4 recall becomes a documented small-corpus property
     -- exactly how production LSH trades junk volume for tail recall.
     One count() of the id column picks b; everything downstream is
-    unchanged."""
+    unchanged.
+
+    Candidates come from banding.band_pairs over (vec_id, band, key,
+    sig0..sig2) rows, with the packed-bit Hamming prefilter as its
+    keep predicate; the exact cosine re-rank is this function's own."""
     import math
 
     n_corpus = corpus.count()
@@ -283,32 +290,22 @@ def lsh_pairs_over(spark: SparkSession, corpus: DataFrame) -> DataFrame:
              .select(F.col("vec_id").cast("bigint").alias("vec_id"), "v"))
     sigs = clean.mapInPandas(_signatures, sig_schema)
     keys = F.array(*[
-        F.struct(F.lit(t).alias("table"), F.col(f"key{t}").alias("key"))
+        F.struct(F.lit(t).alias("band"), F.col(f"key{t}").alias("key"))
         for t in range(n_tables)])
-    # r11 (guide §5): buckets feeds both sides of the bucket
-    # self-join, so the Arrow signature stage (the BLAS matmul over
-    # every vector) previously ran TWICE; the checkpointed table is
-    # (vec_id, 3 sigs, table, key) -- 40 bytes x n_tables per vector,
-    # never vector-sized.
     buckets = (sigs.select("vec_id", "sig0", "sig1", "sig2",
                            F.explode(keys).alias("tk"))
                .select("vec_id", "sig0", "sig1", "sig2",
-                       F.col("tk.table").alias("table"),
-                       F.col("tk.key").alias("key"))
-               .localCheckpoint(eager=True))
-    a, c = buckets.alias("a"), buckets.alias("c")
-    hamming = sum(
-        F.bit_count(F.col(f"a.sig{k}").bitwiseXOR(F.col(f"c.sig{k}")))
-        for k in range(3))
+                       F.col("tk.band").alias("band"),
+                       F.col("tk.key").alias("key")))
     # agreement >= ceil(n_bits * (1 - acos(0.3)/pi)) <=> est cos >= 0.3
     min_agree = math.ceil(n_bits * (1 - math.acos(0.3) / math.pi))
-    cand = (a.join(c, (F.col("a.table") == F.col("c.table"))
-                   & (F.col("a.key") == F.col("c.key"))
-                   & (F.col("a.vec_id") < F.col("c.vec_id")))
-            .where(n_bits - hamming >= min_agree)
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("c.vec_id").alias("vec_b"))
-            .dropDuplicates(["vec_a", "vec_b"]))
+
+    def agree(a, c):
+        hamming = sum(F.bit_count(a(f"sig{k}").bitwiseXOR(c(f"sig{k}")))
+                      for k in range(3))
+        return n_bits - hamming >= min_agree
+
+    cand = band_pairs(buckets, "vec_id", ("vec_a", "vec_b"), keep=agree)
     va = corpus.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("xa"))
     vb = corpus.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("xb"))
     cos = (_dot(F.col("xa"), F.col("xb"))
@@ -328,12 +325,16 @@ from recommendation_system_spark_ml_spark.sources.realistic import (  # noqa: E4
 )
 
 
-@register("sim_lsh", oracle=f"""
+def _lsh_contract_oracle(vectors_sql: str) -> str:
+    """The exact side of the sign-LSH probe contract: each probe
+    vector's 0.4-neighbor count by exhaustive scan over `vectors_sql`
+    (a FROM clause yielding vec_id, embedding)."""
+    return f"""
 WITH v AS (
     SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x,
            sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
                                         e -> e * e))) AS nrm
-    FROM embeddings
+    FROM {vectors_sql}
 ), q AS (SELECT * FROM v WHERE vec_id < {SIM_CHECK_N} AND nrm > 0)
 SELECT q.vec_id,
        CAST(sum(CASE WHEN c.vec_id <> q.vec_id AND c.nrm > 0
@@ -345,118 +346,29 @@ SELECT q.vec_id,
        TRUE AS lsh_count_le_exact
 FROM q, v c
 GROUP BY q.vec_id
-""")
-def sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashable agreement contract over sim_lsh_pairs (r6 verdict
-    task 2, the ml_als_cv_full promotion pattern): for each of a
-    FIXED {SIM_CHECK_N}-vector probe slice, the oracle computes the
+"""
+
+
+def _lsh_contract(spark: SparkSession, corpus: DataFrame) -> DataFrame:
+    """Hashable agreement contract over lsh_pairs_over(corpus) (r6
+    verdict task 2, the ml_als_cv_full promotion pattern): for each of
+    a FIXED SIM_CHECK_N-vector probe slice, the oracle computes the
     exact 0.4-neighbor count (a genuine cross-engine value check --
     Spark's zip_with/aggregate ascending fold vs DuckDB's list_sum
-    fold, round-4 before the threshold on both sides, exactly
-    sim_lsh_pairs' own acceptance test), and the contract boolean
-    asserts the LSH pipeline returned AT MOST that many pairs
-    touching the probe -- guaranteed by construction at float level,
-    because sim_lsh_pairs re-ranks candidates with the IDENTICAL
-    round-4 cosine expression before its >= 0.4 filter, so every
-    returned pair is in the exact set. Recall (dataset-conditional,
-    so never pinned in a hash -- the r6 HLL-bound ADVICE lesson)
-    stays in the local recall-gate tests.
+    fold, round-4 before the threshold on both sides, exactly the
+    pipeline's own acceptance test), and the contract boolean asserts
+    the LSH pipeline returned AT MOST that many pairs touching the
+    probe -- guaranteed by construction at float level, because
+    lsh_pairs_over re-ranks candidates with the IDENTICAL round-4
+    cosine expression before its >= 0.4 filter, so every returned pair
+    is in the exact set. Recall (dataset-conditional, so never pinned
+    in a hash -- the r6 HLL-bound ADVICE lesson) stays in the local
+    recall-gate tests.
 
-    Scale: the exact side is {SIM_CHECK_N} broadcast probe rows x
+    Scale: the exact side is SIM_CHECK_N broadcast probe rows x
     corpus -- LINEAR in the corpus, map-side dots, one bounded
     groupBy; the LSH side is the production banded pipeline
     unchanged, so the operator under measurement still executes."""
-    pin_session_conf(spark)
-    corpus = _corpus(spark, sf_dir)
-    withn = corpus.select(
-        "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"))
-    q = (withn.where((F.col("vec_id") < SIM_CHECK_N) & (F.col("nrm") > 0))
-         .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
-                 F.col("nrm").alias("qnrm")))
-    c = withn.select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"),
-                     F.col("nrm").alias("cnrm"))
-    cos4 = F.round(_dot(F.col("qv"), F.col("cv"))
-                   / (F.col("qnrm") * F.col("cnrm")), 4)
-    hit = ((F.col("cid") != F.col("qid")) & (F.col("cnrm") > 0)
-           & (cos4 >= 0.4)).cast("long")
-    exact = (F.broadcast(q).crossJoin(c)
-             .groupBy(F.col("qid").alias("vec_id"))
-             .agg(F.sum(hit).alias("n_exact_neighbors")))
-    pairs = sim_lsh_pairs(spark, sf_dir)
-    touched = (pairs.select(F.col("vec_a").alias("vec_id"))
-               .unionAll(pairs.select(F.col("vec_b").alias("vec_id")))
-               .where(F.col("vec_id") < SIM_CHECK_N)
-               .groupBy("vec_id")
-               .agg(F.count(F.lit(1)).alias("n_lsh")))
-    return (exact.join(touched, "vec_id", "left")
-            .select("vec_id", "n_exact_neighbors",
-                    (F.coalesce(F.col("n_lsh"), F.lit(0))
-                     <= F.col("n_exact_neighbors"))
-                    .alias("lsh_count_le_exact")))
-
-
-def _realistic_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from recommendation_system_spark_ml_spark.sources.realistic import (
-        realistic_embeddings,
-    )
-    return (realistic_embeddings(spark, sf_dir)
-            .select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("v")))
-
-
-def sim_lsh_realistic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production sign-LSH pair list over the realistic clustered
-    corpus -- the pair-producing face the planted-twin recall gate
-    scores; the registered contract sim_lsh_realistic executes it in
-    full (byte-identical pipeline: lsh_pairs_over)."""
-    pin_session_conf(spark)
-    return lsh_pairs_over(spark, _realistic_corpus(spark, sf_dir))
-
-
-@register("sim_lsh_realistic", bench=True, oracle=f"""
-WITH v AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS x,
-           sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
-                                        e -> e * e))) AS nrm
-    FROM read_parquet('{_REALISTIC_EMB_GLOB}')
-    WHERE src_n = (SELECT count(*) FROM embeddings)
-), q AS (SELECT * FROM v WHERE vec_id < {SIM_CHECK_N} AND nrm > 0)
-SELECT q.vec_id,
-       CAST(sum(CASE WHEN c.vec_id <> q.vec_id AND c.nrm > 0
-                      AND round(list_sum(list_transform(
-                              range(1, CAST(len(q.x) AS BIGINT) + 1),
-                              i -> q.x[i] * c.x[i])) / (q.nrm * c.nrm), 4)
-                          >= 0.4
-                 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_neighbors,
-       TRUE AS lsh_count_le_exact
-FROM q, v c
-GROUP BY q.vec_id
-""")
-def sim_lsh_realistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_lsh_pairs over the realistic clustered-embedding corpus
-    (sources/realistic.py::realistic_embeddings -- r8 verdict task 7):
-    the driver's near-uniform sphere maximizes banding collisions
-    (every bucket loads evenly; the sf1 row measured the fixture, not
-    the engine, slope 0.84), so this is the headline/scale slot for
-    sign-LSH. The fixture concentrates vectors on ~n/50 mild-Zipf
-    topic clusters whose within-cluster cosine (~0.31) sits at the
-    Hamming prefilter's design point (hard negatives: they collide in
-    buckets and die at the exact re-rank) while planted 1% twins
-    (cosine ~0.998) and the cluster-cosine tail form the true output.
-
-    HASH-VERIFIED since r10 (r9 verdict task 1): the corpus is
-    persisted at a fixed shared path the DuckDB oracle reads through
-    a static read_parquet glob (src_n picks the sf), so the same
-    {SIM_CHECK_N}-probe agreement contract as sim_lsh applies
-    verbatim -- the oracle computes each probe vector's exact
-    0.4-neighbor count and the boolean asserts the LSH pipeline
-    returned AT MOST that many pairs touching the probe (guaranteed:
-    every returned pair passed the identical round-4 cosine filter).
-    Planted-twin recall + geometry stay in the local gate, which
-    scores sim_lsh_realistic_pairs directly. The exact side is
-    {SIM_CHECK_N} broadcast probe rows x corpus -- linear."""
-    pin_session_conf(spark)
-    corpus = _realistic_corpus(spark, sf_dir)
     withn = corpus.select(
         "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"))
     q = (withn.where((F.col("vec_id") < SIM_CHECK_N) & (F.col("nrm") > 0))
@@ -482,6 +394,57 @@ def sim_lsh_realistic(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.coalesce(F.col("n_lsh"), F.lit(0))
                      <= F.col("n_exact_neighbors"))
                     .alias("lsh_count_le_exact")))
+
+
+@register("sim_lsh", oracle=_lsh_contract_oracle("embeddings"))
+def sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sign-LSH probe contract (_lsh_contract) over the driver's
+    `embeddings`, running sim_lsh_pairs' pipeline in full."""
+    pin_session_conf(spark)
+    return _lsh_contract(spark, _corpus(spark, sf_dir))
+
+
+def _realistic_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from recommendation_system_spark_ml_spark.sources.realistic import (
+        realistic_embeddings,
+    )
+    return (realistic_embeddings(spark, sf_dir)
+            .select("vec_id",
+                    F.col("embedding").cast("array<double>").alias("v")))
+
+
+def sim_lsh_realistic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production sign-LSH pair list over the realistic clustered
+    corpus -- the pair-producing face the planted-twin recall gate
+    scores; the registered contract sim_lsh_realistic executes it in
+    full (byte-identical pipeline: lsh_pairs_over)."""
+    pin_session_conf(spark)
+    return lsh_pairs_over(spark, _realistic_corpus(spark, sf_dir))
+
+
+@register("sim_lsh_realistic", bench=True, oracle=_lsh_contract_oracle(
+    f"read_parquet('{_REALISTIC_EMB_GLOB}')\n"
+    "    WHERE src_n = (SELECT count(*) FROM embeddings)"))
+def sim_lsh_realistic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sign-LSH probe contract (_lsh_contract) over the realistic
+    clustered-embedding corpus (sources/realistic.py::
+    realistic_embeddings -- r8 verdict task 7): the driver's
+    near-uniform sphere maximizes banding collisions (every bucket
+    loads evenly; the sf1 row measured the fixture, not the engine,
+    slope 0.84), so this is the headline/scale slot for sign-LSH. The
+    fixture concentrates vectors on ~n/50 mild-Zipf topic clusters
+    whose within-cluster cosine (~0.31) sits at the Hamming
+    prefilter's design point (hard negatives: they collide in buckets
+    and die at the exact re-rank) while planted 1% twins (cosine
+    ~0.998) and the cluster-cosine tail form the true output.
+
+    HASH-VERIFIED since r10 (r9 verdict task 1): the corpus is
+    persisted at a fixed shared path the DuckDB oracle reads through
+    a static read_parquet glob (src_n picks the sf). Planted-twin
+    recall + geometry stay in the local gate, which scores
+    sim_lsh_realistic_pairs directly."""
+    pin_session_conf(spark)
+    return _lsh_contract(spark, _realistic_corpus(spark, sf_dir))
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,15 +949,19 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the m codebook fits are independent -- overlap them on the
     # cluster exactly like kmeans_sweep does (each fit is seeded and
     # layout-free on its own subvector column, so parallel scheduling
-    # cannot change the result)
+    # cannot change the result); the wrapped target keeps the caller's
+    # job group on the fits' jobs
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     def fit_subspace(j: int):
         return KMeans(k=ksub, seed=SEED + j, featuresCol=f"sub{j}",
                       predictionCol=f"code{j}").fit(with_subs)
 
     with ThreadPoolExecutor(max_workers=m) as pool:
-        models = list(pool.map(fit_subspace, range(m)))
+        models = list(pool.map(
+            inheritable_thread_target(spark)(fit_subspace), range(m)))
     books = [[[float(x) for x in c] for c in km.clusterCenters()]
              for km in models]
     coded = with_subs

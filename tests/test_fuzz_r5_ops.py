@@ -9,6 +9,7 @@ median of an all-NULL frame, empty seasonal tables, zero-variance
 series)."""
 
 import os
+import shutil
 import tempfile
 
 import duckdb
@@ -98,6 +99,7 @@ def test_r5_event_ops_match_oracles_on_hostile_streams(spark, rows):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 @st.composite
@@ -156,6 +158,7 @@ def test_r5_doc_ops_match_oracles_on_skewed_corpora(spark, docs):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 @st.composite
@@ -221,6 +224,7 @@ def test_r5_lineitem_ops_match_oracles_on_nully_tables(spark, rows):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 # Pre-r5 event-table operators swept by the same hostile generator:
@@ -256,6 +260,7 @@ def test_pre_r5_event_ops_match_oracles_on_hostile_streams(spark, rows):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 # Pre-r5 document-table operators swept by the same skewed-corpus
@@ -293,6 +298,7 @@ def test_pre_r5_doc_ops_match_oracles_on_skewed_corpora(spark, docs):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 # Orders/customer operators under NULL-heavy tables. This net caught
@@ -380,3 +386,4 @@ def test_orders_ops_match_oracles_on_nully_tables(spark, tables):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)

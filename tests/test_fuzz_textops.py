@@ -8,6 +8,7 @@ containment == 1.0 prefixes, docs below the 8-token shingle floor,
 non-alpha words, domains with a single document."""
 
 import os
+import shutil
 import tempfile
 
 import duckdb
@@ -86,6 +87,7 @@ def test_random_corpora_match_oracles(spark, docs):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 @st.composite
@@ -147,3 +149,4 @@ def test_random_event_streams_match_watermark_oracle(spark, rows):
             assert_df_matches(got, want)
     finally:
         duck.close()
+        shutil.rmtree(sf_dir, ignore_errors=True)

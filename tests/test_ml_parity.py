@@ -153,7 +153,7 @@ def test_onehot_projection_equals_pivot(spark, duck, tmp_path):
                       oracle_df(duck, spec.oracle, SF_SMOKE))
 
 
-def test_kmeans_sweep_pool_is_capped(monkeypatch):
+def test_kmeans_sweep_pool_is_capped(spark, monkeypatch):
     """A wide sweep must not start one thread per k; the reference's
     nine ks still all run concurrently."""
     import concurrent.futures
@@ -177,10 +177,38 @@ def test_kmeans_sweep_pool_is_capped(monkeypatch):
 
     monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", RecordingPool)
     monkeypatch.setattr(parity, "KMeans", FakeKMeans)
-    wide = parity.kmeans_sweep(None, ks=range(2, 200))
+    feats = spark.range(1)  # the stub fits ignore it; its session is read
+    wide = parity.kmeans_sweep(feats, ks=range(2, 200))
     assert [k for k, _ in wide] == list(range(2, 200))
-    parity.kmeans_sweep(None)
+    parity.kmeans_sweep(feats)
     assert asked == [16, 9]
+
+
+def test_kmeans_sweep_jobs_keep_the_callers_job_group(spark):
+    """Pool threads run the fits' jobs under the caller's job group:
+    no job the sweep starts is left without one."""
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.sql import functions as F
+
+    from recommendation_system_spark_ml_spark.ml.parity import kmeans_sweep
+
+    feats = spark.range(40).select(array_to_vector(F.array(
+        (F.col("id") % 5).cast("double"),
+        (F.col("id") % 3).cast("double"))).alias("features"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "kmeans_sweep_job_group"
+    sc.setJobGroup(group, "job group inheritance check")
+    try:
+        kmeans_sweep(feats, ks=range(2, 5))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    grouped = set(tracker.getJobIdsForGroup(group))
+    stray = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert grouped, "the sweep ran no job under the caller's group"
+    assert not stray, f"jobs {sorted(stray)} left the caller's job group"
 
 
 def test_als_cv_full_reproduces_reference_grid(spark):

@@ -56,7 +56,9 @@ def test_no_unblocked_cartesian_products(spark):
     node over two data-sized inputs is the anti-pattern. The only cross
     joins allowed are against provably-tiny broadcast sides."""
     for name in ("dedup_jaccard", "dedup_minhash", "sim_lsh",
-                 "dedup_minhash_checked", "dedup_simhash_checked"):
+                 "dedup_minhash_checked", "dedup_simhash_checked",
+                 "sim_lsh_realistic", "dedup_minhash_realistic",
+                 "dedup_minhash_incremental"):
         plan = _plan(_specs()[name].fn(spark, SF_SMOKE))
         assert "CartesianProduct" not in plan, name
 

@@ -36,6 +36,32 @@ def test_minhash_finds_near_dup_pairs(spark):
     assert pairs.agg(F.max("jaccard_dist")).first()[0] <= 0.2
 
 
+def test_band_pairs_core_dedups_orders_filters_and_carries(spark):
+    """banding.band_pairs on a hand-built bucket frame: a pair that
+    collides in two bands is emitted once, only as (lower id, higher
+    id), never with itself; keys collide only within one band; keep
+    drops a colliding pair that fails it; extra columns ride along."""
+    from recommendation_system_spark_ml_spark.banding import band_pairs
+    from recommendation_system_spark_ml_spark.session import tiny_frame
+
+    buckets = tiny_frame(spark, [
+        (2, 0, 10, 6), (1, 0, 10, 5), (1, 1, 20, 5), (2, 1, 20, 6),
+        (3, 0, 10, 100), (3, 1, 99, 100),
+        (4, 1, 10, 5),    # key 10 in band 1 meets no band-0 key 10
+        (5, 2, 7, 5),     # alone in its bucket
+    ], "id bigint, band int, key bigint, v bigint")
+
+    rows = band_pairs(buckets, "id", ("id_a", "id_b")).collect()
+    assert sorted((r.id_a, r.id_b) for r in rows) == [(1, 2), (1, 3), (2, 3)]
+    assert rows[0].__fields__ == ["id_a", "id_b"]
+
+    kept = band_pairs(
+        buckets, "id", ("id_a", "id_b"),
+        keep=lambda a, b: F.abs(a("v") - b("v")) <= 10,
+        extra=[("gap", lambda a, b: b("v") - a("v"))]).collect()
+    assert [(r.id_a, r.id_b, r.gap) for r in kept] == [(1, 2, 1)]
+
+
 def test_ivf_recall_vs_brute_force(spark):
     from recommendation_system_spark_ml_spark.operators.similarity import (
         sim_ivf_topk)
