@@ -13,7 +13,9 @@ scale-neutral (AQE coalesces / splits shuffle partitions at runtime).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -123,6 +125,14 @@ def tiny_frame(spark: SparkSession, rows, schema: str):
         for row in rows])))
 
 
+_scratch_owner: int | None = None  # pid whose exit hook is registered
+
+
+def _remove_scratch(pid: int, path: str) -> None:
+    if os.getpid() == pid:  # not in a forked child that inherited the hook
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_path(sf_dir: str, name: str) -> str:
     """Per-process scratch directory for round-trip queries.
 
@@ -130,8 +140,13 @@ def scratch_path(sf_dir: str, name: str) -> str:
     factor cannot overwrite each other's files mid-read (the fixed
     shared path used before made that race possible). Within one
     process, re-runs reuse the same path -- writes are mode=overwrite,
-    so idempotent."""
-    import os as _os
-
-    return _os.path.join("/tmp/rsml_scratch", f"pid{_os.getpid()}",
-                         _os.path.basename(_os.path.normpath(sf_dir)), name)
+    so idempotent. The process's directory is removed when its
+    interpreter exits (an ``atexit`` hook registered by the first
+    call)."""
+    global _scratch_owner
+    pid = os.getpid()
+    root = os.path.join("/tmp/rsml_scratch", f"pid{pid}")
+    if _scratch_owner != pid:
+        _scratch_owner = pid
+        atexit.register(_remove_scratch, pid, root)
+    return os.path.join(root, os.path.basename(os.path.normpath(sf_dir)), name)

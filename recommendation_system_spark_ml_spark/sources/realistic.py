@@ -49,7 +49,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recommendation_system_spark_ml_spark.sources.catalog import load
+from recommendation_system_spark_ml_spark.sources.catalog import (
+    path_for, read_parquet, row_count)
 
 _SHARED_ROOT = "/tmp/rsml_scratch/shared"
 _DOCS_VERSION = "realistic_docs_v2"   # bump when the generator changes
@@ -106,7 +107,7 @@ def realistic_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     of `documents`, same schema subset (doc_id, text): row count
     matches the sf's documents table plus the planted twins
     (1 per DUP_EVERY base docs)."""
-    n = load(spark, sf_dir, "documents").count()
+    n = row_count(spark, path_for(sf_dir, "documents"))
     out = _shared_path(n, _DOCS_VERSION)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         vocab = max(1_000, 50 * n)
@@ -143,7 +144,7 @@ def realistic_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                             " ").alias("text"),
                         F.lit(n).cast("long").alias("src_n")),
             out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 # ----------------------------------------------------------------- embeddings
@@ -186,7 +187,7 @@ def realistic_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     draw is an xxhash64 of (salt, id, dim), the corpus is a pure
     function of the driver embedding count, built once at the fixed
     shared path with an atomic rename."""
-    n = load(spark, sf_dir, "embeddings").count()
+    n = row_count(spark, path_for(sf_dir, "embeddings"))
     out = _shared_path(n, _EMB_VERSION)
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         c_clusters = max(20, n // 50)
@@ -212,10 +213,13 @@ def realistic_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * EMB_TWIN_EPS).otherwise(F.lit(0.0))
             return (center + noise * EMB_SIGMA + tw).cast("float")
 
-        vec = F.array(*[comp(F.lit(d)) for d in range(EMB_DIM)])
+        # one lambda over the dims: EMB_DIM unrolled terms outgrow one
+        # generated method (64 KB), and Spark then falls back to
+        # interpreted evaluation
+        vec = F.transform(F.sequence(F.lit(0), F.lit(EMB_DIM - 1)), comp)
         _atomic_build(
             both.select("vec_id", vec.alias("embedding"),
                         cluster.cast("int").alias("label"),
                         F.lit(n).cast("long").alias("src_n")),
             out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)

@@ -28,3 +28,31 @@ def test_default_driver_memory_fits_the_host(monkeypatch):
     assert host(2048) == 1024
     assert host(15 << 10) == 15 << 9
     assert host(1 << 20) == 48 << 10
+
+
+def test_scratch_dir_is_removed_at_exit():
+    """A process's scratch directory is gone once its interpreter exits,
+    and the exit hook is registered once however often the path is
+    asked for."""
+    import subprocess
+    import sys
+
+    code = """if 1:
+        import atexit, os
+        from recommendation_system_spark_ml_spark import session
+        n = atexit._ncallbacks()
+        p = session.scratch_path("/data/sf0.01/", "a")
+        session.scratch_path("/data/sf0.01", "b")
+        os.makedirs(p)
+        open(os.path.join(p, "part-0.parquet"), "w").close()
+        print(atexit._ncallbacks() - n, p)
+        """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True).stdout.split()
+    hooks, path = int(out[0]), out[1]
+    assert hooks == 1
+    pid_dir = os.path.dirname(os.path.dirname(path))
+    assert path == os.path.join(pid_dir, "sf0.01", "a")
+    assert os.path.basename(pid_dir).startswith("pid")
+    assert not os.path.exists(pid_dir)

@@ -13,8 +13,10 @@ columns are definitionally the fixture vocabulary) and, under some
 seeds, any future op with a documented degenerate-input caveat
 (agg_corr_matrix's ANSI corr on a constant column).
 """
+import atexit
 import os
 import random
+import shutil
 import sys
 import tempfile
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -34,6 +36,8 @@ specs = all_specs()
 random.seed(int(sys.argv[1]) if len(sys.argv) > 1 else 3)
 print("seed:", sys.argv[1] if len(sys.argv) > 1 else 3, flush=True)
 out = tempfile.mkdtemp(prefix="probe_all_")
+# the whole script reads this twin; removed however the script ends
+atexit.register(shutil.rmtree, out, ignore_errors=True)
 
 def maybe(v, p=0.1):
     return None if random.random() < p else v
@@ -266,30 +270,33 @@ for label, overrides, qnames in EDGES:
     if only and not (set(qnames) & only):
         continue
     d = tempfile.mkdtemp(prefix=f"probe_edge_{label}_")
-    for tname in ALL_TABLES:
-        dst = os.path.join(d, f"{tname}.parquet")
-        if tname in overrides:
-            pq.write_table(pa.table(overrides[tname]), dst)
-        else:
-            os.link(os.path.join(out, f"{tname}.parquet"), dst)
-    con = duckdb.connect()
-    for tname in ALL_TABLES:
-        con.execute(f"CREATE VIEW {tname} AS SELECT * FROM "
-                    f"read_parquet('{d}/{tname}.parquet')")
-    for qname in qnames:
-        if only and qname not in only:
-            continue
-        try:
-            got = specs[qname].fn(spark, d)
-            want = con.execute(specs[qname].oracle).df()
-            assert_df_matches(got, want)
-            results["OK"] += 1
-            print(f"EDGE {label}/{qname} OK", flush=True)
-        except AssertionError as e:
-            fails.append((f"{label}/{qname}", "MISMATCH", str(e)[:130]))
-        except Exception as e:
-            fails.append((f"{label}/{qname}", type(e).__name__, str(e)[:130]))
-    con.close()
+    try:
+        for tname in ALL_TABLES:
+            dst = os.path.join(d, f"{tname}.parquet")
+            if tname in overrides:
+                pq.write_table(pa.table(overrides[tname]), dst)
+            else:
+                os.link(os.path.join(out, f"{tname}.parquet"), dst)
+        con = duckdb.connect()
+        for tname in ALL_TABLES:
+            con.execute(f"CREATE VIEW {tname} AS SELECT * FROM "
+                        f"read_parquet('{d}/{tname}.parquet')")
+        for qname in qnames:
+            if only and qname not in only:
+                continue
+            try:
+                got = specs[qname].fn(spark, d)
+                want = con.execute(specs[qname].oracle).df()
+                assert_df_matches(got, want)
+                results["OK"] += 1
+                print(f"EDGE {label}/{qname} OK", flush=True)
+            except AssertionError as e:
+                fails.append((f"{label}/{qname}", "MISMATCH", str(e)[:130]))
+            except Exception as e:
+                fails.append((f"{label}/{qname}", type(e).__name__, str(e)[:130]))
+        con.close()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 for f in fails:
     print("FAIL", *f, flush=True)
