@@ -834,18 +834,18 @@ def min_label_components(docs: DataFrame, edges: DataFrame,
     # broadcast-vector gate (r10, guide §3.1 -- the graph.py recipe):
     # the label table is bounded by the dup-graph node count; under
     # the gate each round's message join broadcasts it, so the edge
-    # list is never re-shuffled round over round.
-    from recommendation_system_spark_ml_spark.operators.graph import (
-        GRAPH_BCAST_MAX_NODES)
+    # list is never re-shuffled round over round. Imported here, not at
+    # module level: importing graph first would change the order in
+    # which the registry sees the two modules' queries.
+    from recommendation_system_spark_ml_spark.operators.graph import _vec
     n_comp = comp.count()  # driver scalar; also materializes the cache
     prev_sum = None
     # Iteration cap: min-label propagation converges in O(diameter)
     # rounds; the cap turns a pathological input (or a future bug) into
     # a loud error instead of an unbounded job.
     for round_no in range(1, max_rounds + 1):
-        comp_j = (F.broadcast(comp) if n_comp <= GRAPH_BCAST_MAX_NODES
-                  else comp)
-        msgs = (undirected.join(comp_j, undirected.dst == comp.doc_id)
+        msgs = (undirected.join(_vec(comp, n_comp),
+                                undirected.dst == comp.doc_id)
                 .select(F.col("src").alias("doc_id"), "comp"))
         new_comp = (comp.union(msgs)
                     .groupBy("doc_id").agg(F.min("comp").alias("comp")))

@@ -15,8 +15,24 @@ list against the rank vector (both hash-partitioned on the SAME key, so
 AQE reuses the exchange) and one groupBy(dst) sum -- the textbook
 2-shuffle PageRank step. Ranks are localCheckpoint'ed mid-loop to cut
 lineage growth (10 iterations would otherwise compound a 40-node plan
-per step); the edge+degree table is cached once. The only driver
-scalars are the node count and the loop bound -- never row data.
+per step); the edge+degree table is localCheckpoint'ed once. The only
+driver scalars are the node count and the loop bound -- never row data.
+
+Graph construction is decided once per graph, each Spark builder
+paired with its DuckDB CTE twin:
+
+- ``_bipartite_edges`` / ``_BIPARTITE_SQL``: the part<->supplier graph
+  (pagerank, k-core, label propagation, PPR, modularity). Node ids are
+  'p'||partkey and 's'||suppkey; a lineitem row with a NULL key adds
+  no edge; each distinct supply relationship is one edge each way.
+- ``_coorder_edges`` / ``_COORDER_SQL``: the part co-order graph
+  (triangle count, link prediction) as its distinct u < v edge set.
+- ``_rank_inputs`` / ``_DEG_SQL``: the out-degree table and the
+  degree-annotated edge table both power iterations join each round.
+- ``_min_labels`` / ``_labelprop_cte``: the bounded min-label rounds
+  (label propagation, modularity).
+- ``_vec``: the broadcast gate on every per-round |V|-sized join side,
+  shared with ``dedup.min_label_components``.
 """
 
 from __future__ import annotations
@@ -59,6 +75,82 @@ def _vec(df: DataFrame, n_nodes: int) -> DataFrame:
     """The |V|-sized side of a per-iteration join: broadcast when the
     node count is under the gate, else leave the planner's choice."""
     return F.broadcast(df) if n_nodes <= GRAPH_BCAST_MAX_NODES else df
+
+
+# A NULL key must add no edge: a NULL node id never equals itself in
+# the per-round ``src = node`` join, so it would receive rank every
+# round and never pass it on.
+_BIPARTITE_SQL = """e0 AS (
+    SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
+                    's' || CAST(l_suppkey AS VARCHAR) AS dst
+    FROM lineitem WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
+), und AS MATERIALIZED (
+    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
+)"""
+
+
+def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The doubled part<->supplier edge list (src, dst), lazy: the
+    Spark twin of ``_BIPARTITE_SQL``'s ``und``."""
+    li = (load(spark, sf_dir, "lineitem")
+          .where(F.col("l_partkey").isNotNull()
+                 & F.col("l_suppkey").isNotNull()))
+    half = (li.select(
+        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
+        .distinct())
+    return half.union(half.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst")))
+
+
+_COORDER_SQL = """oi AS (
+    SELECT DISTINCT l_orderkey AS o, l_partkey AS item
+    FROM lineitem WHERE l_partkey IS NOT NULL
+), e AS MATERIALIZED (
+    SELECT DISTINCT a.item AS u, b.item AS v
+    FROM oi a JOIN oi b ON a.o = b.o AND a.item < b.item
+)"""
+
+
+def _coorder_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-order edge set (u, v), u < v, distinct, lazy: two
+    parts are adjacent when some order contains both. Generation is
+    the bounded-fan-out self-join on the order key (<= 21 id pairs per
+    TPC-H order, never a projection of a hub). The Spark twin of
+    ``_COORDER_SQL``'s ``e``."""
+    oi = (load(spark, sf_dir, "lineitem")
+          .where(F.col("l_partkey").isNotNull())
+          .select(F.col("l_orderkey").alias("o"),
+                  F.col("l_partkey").alias("item"))
+          .distinct())
+    a, b = oi.alias("a"), oi.alias("b")
+    return (a.join(b, (F.col("a.o") == F.col("b.o"))
+                   & (F.col("a.item") < F.col("b.item")))
+            .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
+            .distinct())
+
+
+_DEG_SQL = """deg AS MATERIALIZED (
+    SELECT src, count(*) AS outdeg FROM und GROUP BY 1
+)"""
+
+
+def _rank_inputs(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """(deg, ed, n_nodes) for a power iteration over the directed edge
+    list ``edges`` (src, dst); ``deg`` is the Spark twin of ``_DEG_SQL``.
+
+    ``deg`` (src, outdeg) is materialized once, eagerly (V rows): its
+    count is the broadcast-vector gate and the rank seed. ``ed`` (src,
+    dst, outdeg) is the one materialized edge+degree table every round
+    joins (localCheckpoint: computed once, lineage cut, blocks
+    reclaimed by the ContextCleaner when unreferenced -- no unpersist
+    race against the returned lazy plan). The degree attach is a
+    broadcast of the V-sized side, so edges pay no shuffle there."""
+    deg = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+           .localCheckpoint(eager=True))
+    n_nodes = deg.count()  # driver scalar: node count, never row data
+    ed = edges.join(_vec(deg, n_nodes), "src").localCheckpoint(eager=True)
+    return deg, ed, n_nodes
 
 
 def _power_iterate(ed: DataFrame, ranks: DataFrame, n_nodes: int,
@@ -129,21 +221,13 @@ def _pagerank_oracle() -> str:
     SELECT e.dst AS node,
            (1 - {DAMPING}) / (SELECT n FROM nn)
            + {DAMPING} * sum(r.rank / d.outdeg) AS rank
-    FROM edges e
+    FROM und e
     JOIN r{i - 1} r ON e.src = r.node
     JOIN deg d ON e.src = d.src
     GROUP BY e.dst
 )""")
     return f"""
-WITH e0 AS (
-    SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                    's' || CAST(l_suppkey AS VARCHAR) AS dst
-    FROM lineitem
-), edges AS (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
-), deg AS (
-    SELECT src, count(*) AS outdeg FROM edges GROUP BY 1
-), nn AS (
+WITH {_BIPARTITE_SQL}, {_DEG_SQL}, nn AS (
     SELECT count(*) AS n FROM deg
 ), r0 AS (
     SELECT src AS node, 1.0 / (SELECT n FROM nn) AS rank FROM deg
@@ -156,9 +240,11 @@ FROM r{N_ITER}
 @register("graph_pagerank", oracle=_pagerank_oracle(), bench=True)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the part<->supplier bipartite graph from lineitem
-    (edges = distinct supply relationships, doubled to undirected),
-    damping 0.85, 10 power iterations, no dangling nodes by
-    construction (every node appears in an edge). Returns ranks scaled
+    (``_bipartite_edges``: distinct supply relationships, doubled to
+    undirected, no edge from a NULL key), damping 0.85, 10 power
+    iterations over ``_rank_inputs``' materialized edge+degree table,
+    no dangling nodes by construction (every node appears in an edge,
+    so the scaled ranks sum to the node count). Returns ranks scaled
     by node count (mean 1.0) rounded to 6 -- coarse enough to absorb
     cross-engine float-summation order, fine enough to rank.
 
@@ -184,24 +270,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chain-graph property test exercises the genuinely-early exit
     on a 60-round cap."""
     pin_session_conf(spark)
-    li = load(spark, sf_dir, "lineitem")
-    half = (li.select(
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-        .distinct())
-    edges = half.union(half.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    # one materialized degree table (V rows): its count is the gate for
-    # the broadcast-vector iteration strategy AND the rank seed.
-    deg = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-           .localCheckpoint(eager=True))
-    n_nodes = deg.count()  # driver scalar: node count, never row data
-    # one materialized edge+degree table serves all 10 per-iteration
-    # joins (localCheckpoint: computed once, lineage cut, blocks
-    # reclaimed by the ContextCleaner when unreferenced -- no unpersist
-    # race against the returned lazy plan). The degree attach is a
-    # broadcast of the V-sized side, so edges pay no shuffle here.
-    ed = edges.join(_vec(deg, n_nodes), "src").localCheckpoint(eager=True)
+    deg, ed, n_nodes = _rank_inputs(_bipartite_edges(spark, sf_dir))
     ranks = deg.select(F.col("src").alias("node"),
                        F.lit(1.0 / n_nodes).alias("rank"))
     ranks, _ = _power_iterate(ed, ranks, n_nodes)
@@ -252,14 +321,8 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_nodes")))
 
 
-@register("graph_triangle_count", bench=True, oracle="""
-WITH oi AS (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-    FROM lineitem WHERE l_partkey IS NOT NULL
-), e AS (
-    SELECT DISTINCT a.item AS u, b.item AS v
-    FROM oi a JOIN oi b ON a.o = b.o AND a.item < b.item
-), deg AS (
+@register("graph_triangle_count", bench=True, oracle=f"""
+WITH {_COORDER_SQL}, deg AS (
     SELECT node, count(*) AS d FROM (
         SELECT u AS node FROM e UNION ALL SELECT v FROM e
     ) GROUP BY 1
@@ -281,9 +344,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the part co-order graph (parts
     are adjacent when some order contains both) -- the clustering-
     coefficient / community-density primitive next to graph_pagerank's
-    centrality and dedup_components' connectivity. Edge generation is
-    the bounded-fan-out self-join on the order key (<= 21 id pairs per
-    TPC-H order, never a projection of a hub).
+    centrality and dedup_components' connectivity. The edge set is
+    ``_coorder_edges``.
 
     The triangle join runs on the DEGREE-ORDERED orientation (each
     undirected edge points from its (degree, id)-smaller endpoint), the
@@ -296,16 +358,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integers, and the oracle replays the identical orientation via
     tuple comparison."""
     pin_session_conf(spark)
-    oi = (load(spark, sf_dir, "lineitem")
-          .where(F.col("l_partkey").isNotNull())
-          .select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("item"))
-          .distinct())
-    a, b = oi.alias("a"), oi.alias("b")
-    e = (a.join(b, (F.col("a.o") == F.col("b.o"))
-                & (F.col("a.item") < F.col("b.item")))
-         .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
-         .distinct())
+    e = _coorder_edges(spark, sf_dir)
     deg = (e.select(F.col("u").alias("node"))
            .union(e.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("d"))
@@ -366,13 +419,7 @@ def _kcore_oracle() -> str:
 )""")
         prev = f"a{t}"
     return f"""
-WITH e0 AS (
-    SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                    's' || CAST(l_suppkey AS VARCHAR) AS dst
-    FROM lineitem WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-), und AS MATERIALIZED (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
-), a0 AS MATERIALIZED (
+WITH {_BIPARTITE_SQL}, a0 AS MATERIALIZED (
     SELECT DISTINCT src AS node FROM und
 ), {", ".join(steps)}
 SELECT node, CAST(deg AS BIGINT) AS degree
@@ -396,19 +443,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: one semi-join of the checkpointed edge list against
     the shrinking alive set (frontier-sized, never corpus-sized
     growth) and one partial-combined degree count -- 2 shuffles/round
-    like pagerank, all-integer so the unrolled oracle is exact.
-    Lineage cut every 3 rounds."""
+    like pagerank, all-integer so the unrolled oracle is exact. The
+    edge list is ``_bipartite_edges``, materialized once; the alive
+    set is checkpointed every round (see the loop)."""
     pin_session_conf(spark)
-    li = (load(spark, sf_dir, "lineitem")
-          .where(F.col("l_partkey").isNotNull()
-                 & F.col("l_suppkey").isNotNull()))
-    half = (li.select(
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-        .distinct())
-    und = (half.union(half.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
-           .localCheckpoint(eager=True))
+    und = _bipartite_edges(spark, sf_dir).localCheckpoint(eager=True)
     alive = und.select(F.col("src").alias("node")).distinct()
     n_nodes = alive.count()  # driver scalar: broadcast-vector gate
     deg = None
@@ -453,13 +492,7 @@ def _labelprop_cte() -> str:
 )""")
         prev = f"l{t}"
     return f"""
-WITH e0 AS (
-    SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                    's' || CAST(l_suppkey AS VARCHAR) AS dst
-    FROM lineitem WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-), und AS MATERIALIZED (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
-), l0 AS MATERIALIZED (
+WITH {_BIPARTITE_SQL}, l0 AS MATERIALIZED (
     SELECT DISTINCT src AS node, src AS label FROM und
 ), {", ".join(steps)}"""
 
@@ -470,36 +503,11 @@ SELECT node, label FROM l{LP_ROUNDS}
 """
 
 
-@register("graph_label_propagation", oracle=_labelprop_oracle())
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-round min-label propagation over the part<->supplier
-    graph (the HashMin community/component sweep of Raghavan et al.
-    2007's LPA family, with the deterministic min-label update instead
-    of the randomized majority vote): after {LP_ROUNDS} synchronous
-    rounds every node carries the smallest node-id reachable within
-    {LP_ROUNDS} hops -- the bounded-diameter community assignment, and
-    the building block dedup_components runs to fixpoint on documents.
-    FIXED round count rather than convergence: the round budget is
-    part of the algorithm's contract, replayed exactly by both engines
-    (the graph_pagerank/graph_kcore determinism recipe).
-
-    Per round: one join of the checkpointed edge list against the
-    current label table (2-shuffle iteration, the textbook Pregel
-    step as relational algebra) and one partial-combined min; the
-    label table never exceeds |nodes| rows. Lineage cut every 2
-    rounds. Labels are node-id STRINGS -- min over ASCII is byte-order
-    identical across engines, no float anywhere."""
-    pin_session_conf(spark)
-    li = (load(spark, sf_dir, "lineitem")
-          .where(F.col("l_partkey").isNotNull()
-                 & F.col("l_suppkey").isNotNull()))
-    half = (li.select(
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-        .distinct())
-    und = (half.union(half.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
-           .localCheckpoint(eager=True))
+def _min_labels(und: DataFrame) -> tuple[DataFrame, int]:
+    """(lab, n_nodes): LP_ROUNDS synchronous min-label rounds over the
+    materialized doubled edge list ``und`` (src, dst); ``lab`` (node,
+    label) is the lazy last round, one row per node. The Spark twin of
+    ``_labelprop_cte``'s label CTEs."""
     lab = (und.select(F.col("src").alias("node")).distinct()
            .withColumn("label", F.col("node"))
            .localCheckpoint(eager=True))
@@ -522,6 +530,33 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # times once the vector side is broadcast.
         if t < LP_ROUNDS:
             lab = lab.localCheckpoint(eager=True)
+    return lab, n_nodes
+
+
+@register("graph_label_propagation", oracle=_labelprop_oracle())
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-round min-label propagation over the part<->supplier
+    graph (the HashMin community/component sweep of Raghavan et al.
+    2007's LPA family, with the deterministic min-label update instead
+    of the randomized majority vote): after {LP_ROUNDS} synchronous
+    rounds every node carries the smallest node-id reachable within
+    {LP_ROUNDS} hops -- the bounded-diameter community assignment, and
+    the building block dedup_components runs to fixpoint on documents.
+    FIXED round count rather than convergence: the round budget is
+    part of the algorithm's contract, replayed exactly by both engines
+    (the graph_pagerank/graph_kcore determinism recipe).
+
+    Per round: one join of the checkpointed edge list against the
+    current label table (2-shuffle iteration, the textbook Pregel
+    step as relational algebra) and one partial-combined min; the
+    label table never exceeds |nodes| rows. The edge list is
+    ``_bipartite_edges``, materialized once; the rounds are
+    ``_min_labels``, which checkpoints the label table every round.
+    Labels are node-id STRINGS -- min over ASCII is byte-order
+    identical across engines, no float anywhere."""
+    pin_session_conf(spark)
+    und = _bipartite_edges(spark, sf_dir).localCheckpoint(eager=True)
+    lab, _ = _min_labels(und)
     return lab
 
 
@@ -531,13 +566,7 @@ _LP_Q = 1_000_000  # 6-decimal floor quantization before the ranked cut
 
 
 @register("graph_link_prediction", oracle=f"""
-WITH oi AS (
-    SELECT DISTINCT l_orderkey AS o, l_partkey AS item
-    FROM lineitem WHERE l_partkey IS NOT NULL
-), e AS MATERIALIZED (
-    SELECT DISTINCT a.item AS u, b.item AS v
-    FROM oi a JOIN oi b ON a.o = b.o AND a.item < b.item
-), und AS MATERIALIZED (
+WITH {_COORDER_SQL}, und AS MATERIALIZED (
     SELECT u, v FROM e UNION ALL SELECT v, u FROM e
 ), deg AS MATERIALIZED (
     SELECT u AS node, count(*) AS d FROM und GROUP BY 1
@@ -614,14 +643,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic. deg_mid >= 2 always (the middle touches both
     ends), so ln never sees 1."""
     pin_session_conf(spark)
-    li = load(spark, sf_dir, "lineitem").where(F.col("l_partkey").isNotNull())
-    oi = (li.select(F.col("l_orderkey").alias("o"),
-                    F.col("l_partkey").alias("item")).distinct())
-    a, b = oi.alias("a"), oi.alias("b")
-    e = (a.join(b, (F.col("a.o") == F.col("b.o"))
-                & (F.col("a.item") < F.col("b.item")))
-         .select(F.col("a.item").alias("u"), F.col("b.item").alias("v"))
-         .distinct().localCheckpoint(eager=True))
+    e = _coorder_edges(spark, sf_dir).localCheckpoint(eager=True)
     und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # r11 (guide §5): deg is broadcast TWICE into the orientation (and
     # the before-plan built it four times -- twice per wedge side);
@@ -702,7 +724,7 @@ def _ppr_oracle() -> str:
     for i in range(1, PPR_ITERS + 1):
         steps.append(f"""c{i} AS MATERIALIZED (
     SELECT e.dst AS node, sum(r.rank / d.outdeg) AS m
-    FROM edges e
+    FROM und e
     JOIN {prev} r ON e.src = r.node
     JOIN deg d ON e.src = d.src
     GROUP BY e.dst
@@ -714,15 +736,7 @@ def _ppr_oracle() -> str:
 )""")
         prev = f"r{i}"
     return f"""
-WITH e0 AS (
-    SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                    's' || CAST(l_suppkey AS VARCHAR) AS dst
-    FROM lineitem WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-), edges AS MATERIALIZED (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0
-), deg AS MATERIALIZED (
-    SELECT src, count(*) AS outdeg FROM edges GROUP BY 1
-), nodes AS MATERIALIZED (
+WITH {_BIPARTITE_SQL}, {_DEG_SQL}, nodes AS MATERIALIZED (
     SELECT src AS node,
            src LIKE 'p%'
                AND CAST(substr(src, 2) AS BIGINT) % {PPR_SEED_MOD} = 0
@@ -759,21 +773,11 @@ def graph_personalized_pagerank(spark: SparkSession,
     2-shuffle join/agg but the full node table re-enters via a LEFT
     join to keep zero-rank nodes in the output contract. The seed
     indicator and count are computed from the node table itself
-    (ns is a broadcast scalar); lineage cut every 3 rounds."""
+    (ns is a broadcast scalar); lineage cut every 3 rounds. The graph
+    and its degree tables are graph_pagerank's (``_bipartite_edges``,
+    ``_rank_inputs``)."""
     pin_session_conf(spark)
-    li = (load(spark, sf_dir, "lineitem")
-          .where(F.col("l_partkey").isNotNull()
-                 & F.col("l_suppkey").isNotNull()))
-    half = (li.select(
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-        .distinct())
-    edges = half.union(half.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    deg = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-           .localCheckpoint(eager=True))
-    n_nodes = deg.count()  # driver scalar: node count only
-    ed = edges.join(_vec(deg, n_nodes), "src").localCheckpoint(eager=True)
+    deg, ed, n_nodes = _rank_inputs(_bipartite_edges(spark, sf_dir))
     is_seed = (F.col("node").startswith("p")
                & (F.substring(F.col("node"), 2, 100).cast("bigint")
                   % PPR_SEED_MOD == 0))
@@ -857,20 +861,13 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded label table (internal-edge count + degree sum, both
     partial-combined), one broadcast scalar m; community keyspace is
     bounded by the component count. Exact integer edge counts until
-    the final divisions; q_terms floor-quantize at 1e-6."""
+    the final divisions; q_terms floor-quantize at 1e-6. One
+    ``_bipartite_edges`` materialization feeds both the
+    ``_min_labels`` rounds and the scoring joins."""
     pin_session_conf(spark)
-    li = (load(spark, sf_dir, "lineitem")
-          .where(F.col("l_partkey").isNotNull()
-                 & F.col("l_suppkey").isNotNull()))
-    half = (li.select(
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-        .distinct())
-    und = (half.union(half.select(F.col("dst").alias("src"),
-                                  F.col("src").alias("dst")))
-           .localCheckpoint(eager=True))
-    lab = graph_label_propagation(spark, sf_dir).localCheckpoint(eager=True)
-    n_nodes = lab.count()  # driver scalar: broadcast-vector gate
+    und = _bipartite_edges(spark, sf_dir).localCheckpoint(eager=True)
+    lab, n_nodes = _min_labels(und)
+    lab = lab.localCheckpoint(eager=True)
     m = und.agg((F.count(F.lit(1)) / 2.0).alias("m"))
     la = _vec(lab.select(F.col("node").alias("src"),
                          F.col("label").alias("sl")), n_nodes)

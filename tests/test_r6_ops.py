@@ -93,38 +93,6 @@ def test_calendar_profile_shape_and_peaks(spark):
     assert sum(r.n_events for r in rows) == n_ts
 
 
-def test_triangle_count_matches_brute_force(spark):
-    """Recompute triangles in pure Python from the co-order edge set:
-    per-node counts must match exactly."""
-    from itertools import combinations
-
-    from recommendation_system_spark_ml_spark.operators.graph import (
-        graph_triangle_count)
-    from recommendation_system_spark_ml_spark.sources.catalog import load
-
-    li = (load(spark, SF_SMOKE, "lineitem")
-          .where(F.col("l_partkey").isNotNull())
-          .select("l_orderkey", "l_partkey").distinct().collect())
-    orders = {}
-    for r in li:
-        orders.setdefault(r.l_orderkey, set()).add(r.l_partkey)
-    adj = {}
-    for items in orders.values():
-        for u, v in combinations(sorted(items), 2):
-            adj.setdefault(u, set()).add(v)
-            adj.setdefault(v, set()).add(u)
-    want = {}
-    for u in adj:
-        for v, w in combinations(sorted(adj[u]), 2):
-            # enumerate each triangle once, from its smallest corner
-            if v > u and w in adj.get(v, ()):
-                for n in (u, v, w):
-                    want[n] = want.get(n, 0) + 1
-    got = {r.node: r.n_triangles
-           for r in graph_triangle_count(spark, SF_SMOKE).collect()}
-    assert got == {n: c for n, c in want.items() if c > 0}
-
-
 def test_basket_lift_brute_force_one_pair(spark):
     """Recompute support/confidence/lift for the top returned pair
     straight from the distinct (order, part) table."""

@@ -1,9 +1,9 @@
 """Round-7 wave: semantic invariants + 100 TB plan posture for the
 recommender-evaluation family (recsys_eval.py), the exact-stats family
-(stats.py), graph label-propagation / link prediction, the JL random
-projection, the filter-overlap matrix, and burst detection. Oracle
-parity itself is covered by tests/test_oracle_parity.py; these tests
-pin the properties a hash can't express."""
+(stats.py), the JL random projection, the filter-overlap matrix, and
+burst detection. Oracle parity itself is covered by
+tests/test_oracle_parity.py; these tests pin the properties a hash
+can't express."""
 
 from __future__ import annotations
 
@@ -110,31 +110,6 @@ def test_bootstrap_ci_brackets_mean_and_stays_jvm_side(spark):
     plan = _plan(_specs()["agg_bootstrap_ci"].fn(spark, SF_SMOKE))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Generate" in plan  # the x64 replicate explode is map-side
-
-
-# ------------------------------------------------------------ graph
-
-
-def test_label_propagation_labels_are_reachable_minima(spark):
-    lab = _specs()["graph_label_propagation"].fn(spark, SF_SMOKE)
-    rows = lab.collect()
-    nodes = {r["node"] for r in rows}
-    assert all(r["label"] in nodes for r in rows)   # labels are node ids
-    assert all(r["label"] <= r["node"] for r in rows)  # min-label invariant
-    assert len({r["label"] for r in rows}) < len(rows)  # it propagated
-
-
-def test_link_prediction_pairs_are_nonadjacent_heap_cut(spark):
-    df = _specs()["graph_link_prediction"].fn(spark, SF_SMOKE)
-    rows = df.collect()
-    assert 0 < len(rows) <= 50
-    assert all(r["common_neighbors"] >= 1 for r in rows)
-    assert all(0.0 < r["jaccard"] <= 1.0 for r in rows)
-    aa = [r["adamic_adar"] for r in rows]
-    assert all(a >= b for a, b in zip(aa, aa[1:])) or len(set(aa)) < len(aa)
-    plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
 
 
 # ----------------------------------------------------- vec/text/ts
@@ -251,25 +226,6 @@ def test_itemcf_eval_same_contract_as_popularity(spark):
         assert 0.0 <= row[m] <= 1.0
 
 
-def test_ppr_conserves_mass_and_localizes(spark):
-    """With no dangling nodes, teleport + spread conserve total mass:
-    sum of node-count-scaled ranks = n_nodes (to rounding). Seeds must
-    carry positive rank; rank must localize (seeds' mean > global)."""
-    rows = (_specs()["graph_personalized_pagerank"]
-            .fn(spark, SF_SMOKE).collect())
-    assert rows
-    n = len(rows)
-    total = sum(r["ppr"] for r in rows)
-    assert abs(total - n) < 0.01 * n
-    from recommendation_system_spark_ml_spark.operators.graph import (
-        PPR_SEED_MOD)
-    seed = [r["ppr"] for r in rows
-            if r["node"].startswith("p")
-            and int(r["node"][1:]) % PPR_SEED_MOD == 0]
-    assert seed and min(seed) > 0
-    assert sum(seed) / len(seed) > total / n  # localization
-
-
 def test_identifier_clause_rejects_injection(spark):
     """A hostile identifier parameter must fail to parse as ONE
     identifier, never execute as extra SQL."""
@@ -331,16 +287,6 @@ def test_nearest_centroid_confusion_complete(spark):
                      % 4294967296 % 10 >= 8).count())
     assert sum(r["n"] for r in rows) == n_test
     assert all(0 <= r["pred_label"] <= 9 for r in rows)
-
-
-def test_modularity_terms_bounded_and_sizes_complete(spark):
-    rows = _specs()["graph_modularity"].fn(spark, SF_SMOKE).collect()
-    assert rows
-    q = sum(r["q_term"] for r in rows)
-    assert -0.5 <= q <= 1.0  # Newman Q bounds
-    lab = _specs()["graph_label_propagation"].fn(spark, SF_SMOKE)
-    assert sum(r["size"] for r in rows) == lab.count()
-    assert all(r["internal_edges"] <= r["degree_sum"] for r in rows)
 
 
 def test_als_eval_three_way_experiment(spark):
