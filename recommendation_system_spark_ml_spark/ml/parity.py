@@ -24,9 +24,9 @@ Scale notes: the ratings-analog (o_custkey x l_partkey, l_quantity) is
 fact-table-sized; everything reaching KMeans/ALS stays JVM-side
 (array_to_vector, MLlib). Driver-side materialization only for
 provably-tiny results: the (k, SSE) sweep table, the CV grid, the
-one-hot vocabulary and the per-split RMSE rows; tiny driver-built
-frames go back through session.tiny_frame, so no ML query starts
-Python workers.
+one-hot vocabulary and the per-split RMSE rows; driver-built frames
+go back as one Arrow LocalTableScan (session.local_frame), so no ML
+query starts Python workers.
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
-    pin_session_conf, tiny_frame)
+    local_frame, pin_session_conf)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 SEED = 823  # the reference's seed (MLR.py:30, 145, 208)
@@ -213,7 +213,7 @@ def elbow_frame(spark: SparkSession, rows: list[tuple[int, float]]) -> DataFrame
     (tests/test_golden_log.py), which feeds the reference's OWN
     published SSE table through this code and expects its published
     pick (k=3) back."""
-    sweep = tiny_frame(spark, rows, "k int, sse double")
+    sweep = local_frame(spark, rows, "k int, sse double")
     w = Window.orderBy("k")
     diffed = sweep.withColumn(
         "sse_diff", F.coalesce(F.col("sse") - F.lag("sse").over(w), F.lit(0.0)))
@@ -341,8 +341,8 @@ def ml_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("embedding").isNotNull())
          .select("vec_id", F.col("embedding").cast("array<double>")
                  .alias("x")))
-    ks = tiny_frame(spark, [(k,) for k in range(ELBOW_KMIN, ELBOW_KMAX + 1)],
-                    "k int")
+    ks = local_frame(spark, [(k,) for k in range(ELBOW_KMIN, ELBOW_KMAX + 1)],
+                     "k int")
     cent = (v.crossJoin(F.broadcast(ks))
             .where(F.col("vec_id") < F.col("k"))
             .select("k", F.col("vec_id").alias("cid"), F.col("x").alias("c")))
@@ -518,10 +518,10 @@ def ml_cluster_predictor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-pipeline RMSE/N compared per split to the hashed typed
     values) -- both flip FALSE and hash-mismatch the moment the fit
     merges types. Both faces come out of one scoring pass and the
-    result rows are built on the JVM (session.tiny_frame)."""
+    result rows go back as one LocalTableScan (session.local_frame)."""
     pin_session_conf(spark)
     scores, refines, bijective = cluster_predictor_frames(spark, sf_dir)
-    return tiny_frame(
+    return local_frame(
         spark,
         [(r.split, r.rmse, r.n, refines, bijective,
           r.rmse == r.c_rmse and r.n == r.c_n) for r in scores],
@@ -625,7 +625,7 @@ def ml_als_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, best = als_cv_detail(spark, sf_dir)
     in_band = all(math.isfinite(m) and 0 < m < 50 for _, _, m in rows)
     attains = best[2] == min(m for _, _, m in rows)
-    grid_df = tiny_frame(
+    grid_df = local_frame(
         spark, [(r, p) for r, p, _ in rows], "rank int, reg_param double")
     n_train = (_hash_split(
         ratings_analog(spark, sf_dir)
@@ -723,7 +723,7 @@ def ml_als_cv_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, (pm, m) in enumerate(zip(grid, cv_model.avgMetrics))]
     best_idx = best_by_min_rmse(rows, 4)[0]
     min_rmse = min(r[4] for r in rows)
-    out = tiny_frame(
+    out = local_frame(
         spark, rows,
         "grid_idx int, rank int, max_iter int, reg_param double, avg_rmse double")
     return (out.withColumn("is_best", (F.col("grid_idx") == best_idx).cast("int"))
@@ -854,7 +854,7 @@ def ml_movielens_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("kmeans_test_rmse", round(test_rmse, 4)),
         ("als_test_rmse", round(als_rmse, 4)),
     ]
-    return tiny_frame(spark, report, "metric string, value double")
+    return local_frame(spark, report, "metric string, value double")
 
 
 def als_rmse_detail(spark: SparkSession, sf_dir: str):
@@ -943,7 +943,7 @@ def ml_als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     rmse_eval, rmse_agg, n_test, baseline = als_rmse_detail(spark, sf_dir)
     agree = (n_test == 0) or (abs(rmse_eval - rmse_agg) <= 1e-6)
     finite = (n_test == 0) or math.isfinite(rmse_eval)
-    return tiny_frame(
+    return local_frame(
         spark, [(n_test, baseline, agree, finite)],
         "n_test_scored bigint, baseline_user_rmse double, "
         "evaluator_agrees_aggregate boolean, als_rmse_finite boolean")

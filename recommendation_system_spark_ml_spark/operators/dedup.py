@@ -36,7 +36,8 @@ from recommendation_system_spark_ml_spark.banding import (
 from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
-from recommendation_system_spark_ml_spark.session import pin_session_conf
+from recommendation_system_spark_ml_spark.session import (
+    local_frame, pin_session_conf)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 from recommendation_system_spark_ml_spark.streaming.incremental import (
     IN_CORPUS_SQL, in_corpus)
@@ -2124,9 +2125,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("doc_a", "doc_b", "shared",
                      (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
                      .alias("uni")))
-    th = spark.range(1).select(
-        F.explode(F.array(*[F.lit(p) for p in (50, 60, 70, 80, 90)]))
-        .alias("pct"))
+    th = local_frame(spark, [(p,) for p in (50, 60, 70, 80, 90)], "pct int")
     qual = (pairs.join(F.broadcast(th),
                        F.col("shared") * 100 >= F.col("pct") * F.col("uni"))
             .select("pct", "doc_a", "doc_b"))

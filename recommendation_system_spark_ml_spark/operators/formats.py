@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
-    pin_session_conf, scratch_path as _scratch, tiny_frame)
+    local_frame, pin_session_conf, scratch_path as _scratch)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 
@@ -358,14 +358,21 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the star-schema scan discipline at 100 TB -- a date-dim
     predicate must never cost a full fact scan.
 
+    The calendar dimension is read back from parquet too: over a
+    LocalTableScan, Catalyst would fold era = 'target' into the
+    relation itself and plan no runtime filter at all.
+
     The oracle computes the same join unpartitioned, certifying that
     runtime pruning changes I/O, not answers."""
     pin_session_conf(spark)
     path = _scratch(sf_dir, "orders_by_year_dpp")
+    cal_path = _scratch(sf_dir, "dpp_calendar")
     (load(spark, sf_dir, "orders")
      .withColumn("o_year", F.year("o_orderdate").cast("int"))
      .write.mode("overwrite").partitionBy("o_year").parquet(path))
-    cal = tiny_frame(spark, _DPP_CAL, "o_year int, era string")
+    (local_frame(spark, _DPP_CAL, "o_year int, era string")
+     .write.mode("overwrite").parquet(cal_path))
+    cal = spark.read.parquet(cal_path)
     f = spark.read.parquet(path)
     return (f.join(F.broadcast(cal), "o_year")
             .where(F.col("era") == "target")

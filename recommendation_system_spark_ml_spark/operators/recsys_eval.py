@@ -34,7 +34,7 @@ from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
-    pin_session_conf, tiny_frame)
+    local_frame, pin_session_conf)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 from recommendation_system_spark_ml_spark.ml.parity import ratings_analog
 from recommendation_system_spark_ml_spark.operators.recommend import (
@@ -703,7 +703,7 @@ def ml_rec_eval_als(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_train, n_test = int(n_train or 0), int(n_test or 0)
     n_pool = pool.count()
     subset = int(row["n_users"] or 0) <= n_pool
-    return tiny_frame(
+    return local_frame(
         spark, [(n_train, n_test, n_pool,
                  bool(subset), bool(in_range), bool(ndcg_band))],
         "n_train bigint, n_test bigint, n_eval_users bigint, "

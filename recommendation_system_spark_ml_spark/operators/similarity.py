@@ -31,7 +31,7 @@ from recommendation_system_spark_ml_spark.hashing import (
     knuth_hash, knuth_hash_sql)
 from recommendation_system_spark_ml_spark.registry import register
 from recommendation_system_spark_ml_spark.session import (
-    pin_session_conf, tiny_frame)
+    local_frame, pin_session_conf)
 from recommendation_system_spark_ml_spark.sources.catalog import load
 
 N_QUERIES = 10  # vec_id < 10 is the fixed query set for the checks
@@ -476,8 +476,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (corpus.join(assigned, "vec_id")
              .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v")))))
 
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())],
+    centroids = local_frame(
+        spark, [(i, c.tolist()) for i, c in enumerate(km.clusterCenters())],
         "cell int, cv array<double>")
     queries = (corpus.where(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("query_id"),
@@ -634,9 +634,8 @@ def build_ivf_index(spark: SparkSession, sf_dir: str,
      .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
      .repartition("cell")
      .write.mode("overwrite").partitionBy("cell").parquet(cells_path))
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c])
-         for i, c in enumerate(km.clusterCenters())],
+    centroids = local_frame(
+        spark, [(i, c.tolist()) for i, c in enumerate(km.clusterCenters())],
         "cell int, cv array<double>")
     centroids.write.mode("overwrite").parquet(cent_path)
     corpus.unpersist()
@@ -981,8 +980,8 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # approximate length; code x query -> partial inner product.
     norm_rows = [(j, c, sum(x * x for x in books[j][c]))
                  for j in range(m) for c in range(ksub)]
-    norms = F.broadcast(spark.createDataFrame(
-        norm_rows, "j int, code int, n2 double"))
+    norms = F.broadcast(local_frame(
+        spark, norm_rows, "j int, code int, n2 double"))
 
     queries = (with_subs.where(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("query_id"), "v").collect())
@@ -997,8 +996,8 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lut_rows.append(
                     (q.query_id, j, c,
                      float(sum(a * b for a, b in zip(qs, books[j][c])))))
-    lut = F.broadcast(spark.createDataFrame(
-        lut_rows, "query_id bigint, j int, code int, ip double"))
+    lut = F.broadcast(local_frame(
+        spark, lut_rows, "query_id bigint, j int, code int, ip double"))
 
     exploded = codes.select(
         "vec_id", F.posexplode("codes").alias("j", "code"))
@@ -1370,7 +1369,7 @@ def vec_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims_present = sorted({i for i, _ in cells})
     d = len(dims_present)
     if d == 0:
-        return tiny_frame(
+        return local_frame(
             spark, [], "dim int, loading double, eigenvalue double")
     v = {i: 1.0 / _math.sqrt(d) for i in dims_present}
     nrm = None
@@ -1387,8 +1386,8 @@ def vec_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         nrm = _math.sqrt(sum(x * x for x in w.values()))
         v = {i: (w[i] / nrm if nrm > 0 else None) for i in dims_present}
     rows = [(int(i), v[i], nrm) for i in dims_present]
-    out = spark.createDataFrame(
-        rows, "dim int, loading double, eigenvalue double")
+    out = local_frame(
+        spark, rows, "dim int, loading double, eigenvalue double")
     return out.select("dim", F.round("loading", 6).alias("loading"),
                       F.round("eigenvalue", 4).alias("eigenvalue"))
 
@@ -1526,8 +1525,8 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _math.floor(best_score * _MMR_Q + 0.5) / _MMR_Q))
         selected.append(best_id)
         del remaining[best_id]
-    return tiny_frame(spark, out, "rank int, vec_id bigint, "
-                      "relevance double, mmr_score double")
+    return local_frame(spark, out, "rank int, vec_id bigint, "
+                       "relevance double, mmr_score double")
 
 
 JL_PROJ_DIMS = 16   # target dimensionality of the random projection

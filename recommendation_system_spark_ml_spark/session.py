@@ -5,7 +5,8 @@ executor with every Catalyst-era feature left at 3.0.1 defaults (AQE
 off, 200 shuffle partitions for ~700k rows; MovieLensRecommender.py:109).
 Here the session is tuned for the execution model we actually target:
 many executors, AQE on, shuffle parallelism sized to the cluster, Arrow
-for every Python<->JVM hop.
+for every Python<->JVM hop -- driver-built frames included
+(``local_frame``).
 
 On a real cluster only ``master`` changes; everything else is
 scale-neutral (AQE coalesces / splits shuffle partitions at runtime).
@@ -100,29 +101,30 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def tiny_frame(spark: SparkSession, rows, schema: str):
-    """A driver-built frame of a few rows, built on the JVM side.
+def local_frame(spark: SparkSession, rows, ddl: str):
+    """A driver-built frame: ``rows`` (tuples in ``ddl`` field order)
+    typed by the DDL string ``ddl``, in row order.
 
-    ``spark.createDataFrame(<list>)`` plans a scan of a Python RDD, and
-    executing it forks ``pyspark.daemon`` plus one Python worker per
-    task (~60 MB each) just to unpickle a handful of rows. Here every
-    value is a literal of an ``inline(array(struct(...)))`` over a
-    one-row, one-partition ``range``, so the plan never leaves the JVM.
-    ``schema`` is a DDL string; each value is cast to its field's type
-    and rows keep their order. Planning cost grows with the number of
-    values: from about 64 rows x 3 columns on, ``createDataFrame`` was
-    the faster form in a session whose Python workers were running."""
-    from pyspark.sql import functions as F
+    The rows become one Arrow table, column by column, and
+    ``createDataFrame`` of a ``pa.Table`` plans a single
+    ``LocalTableScan``: no Python-RDD scan, so executing it forks no
+    ``pyspark.daemon`` or Python worker, and no per-value literal for
+    Catalyst to fold. That branch does not consult
+    ``spark.sql.execution.arrow.pyspark.enabled`` and needs no pandas.
+    The rows travel inside the plan, so keep them driver-sized: the
+    largest caller, the IVF centroids (nlist <= 4096 x 64 doubles), is
+    about 2 MB."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    fields = StructType.fromDDL(schema).fields
-    if not rows:
-        return spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields])
-    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*[
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
-                   for v, f in zip(row, fields)])
-        for row in rows])))
+    struct = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+    return spark.createDataFrame(table, struct)
 
 
 _scratch_owner: int | None = None  # pid whose exit hook is registered

@@ -37,6 +37,19 @@ def duck():
     con.close()
 
 
+def _specs():
+    """The query registry, in ``all_specs()`` order. The registry is
+    imported on first call, not when conftest loads."""
+    from recommendation_system_spark_ml_spark.registry import all_specs
+    return all_specs()
+
+
+def _plan(df) -> str:
+    """The formatted physical plan of ``df``."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
 def oracle_df(con: duckdb.DuckDBPyConnection, sql: str, sf_dir: str) -> pd.DataFrame:
     for t in TABLES:
         con.execute(

@@ -20,17 +20,8 @@ from pyspark.sql import functions as F
 
 from recommendation_system_spark_ml_spark.operators.graph import (
     N_ITER, _bipartite_edges, _power_iterate, _rank_inputs)
-from tests.conftest import SF_SMOKE, assert_df_matches, oracle_df
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-
-
-def _specs():
-    from recommendation_system_spark_ml_spark.registry import all_specs
-    return all_specs()
+from tests.conftest import (
+    SF_SMOKE, _plan, _specs, assert_df_matches, oracle_df)
 
 
 def _graph(edges):

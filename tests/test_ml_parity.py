@@ -27,10 +27,11 @@ def test_kmeans_elbow_table_shape_and_monotone_sse(spark):
 
 
 def _assert_built_on_jvm(df):
-    """Driver-computed result rows go through session.tiny_frame: a
+    """Driver-computed result rows go through session.local_frame: a
     `spark.createDataFrame(<list>)` result would plan an ExistingRDD
     scan of a Python RDD, whose execution forks pyspark.daemon and
-    Python workers."""
+    Python workers. Not for sim_pq: its localCheckpoint-ed codes plan
+    as `Scan ExistingRDD` too, with no Python RDD behind them."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan, plan
 
@@ -101,16 +102,24 @@ def test_als_rmse_two_ways_agree(spark, duck):
 
 
 
-def test_tiny_frame_types_order_and_empty(spark):
-    from recommendation_system_spark_ml_spark.session import tiny_frame
+def test_local_frame_types_order_and_empty(spark):
+    from recommendation_system_spark_ml_spark.session import local_frame
 
-    df = tiny_frame(spark, [(3, None, "b", True), (1, 2.5, None, False)],
-                    "k int, v double, s string, f boolean")
-    assert df.dtypes == [("k", "int"), ("v", "double"), ("s", "string"),
-                         ("f", "boolean")]
-    assert [tuple(r) for r in df.collect()] == [(3, None, "b", True),
-                                                (1, 2.5, None, False)]
-    empty = tiny_frame(spark, [], "k int, v double")
+    ddl = ("k int, id bigint, v double, s string, f boolean, "
+           "xs array<double>")
+    rows = [(3, 2 ** 62, None, "b", True, [1.0, -0.5]),
+            (None, -(2 ** 62), 2.5, None, False, []),
+            (1, -7, -0.0, "a", None, None),
+            (0, None, 1e300, "", True, [None, 2.0])]
+    df = local_frame(spark, rows, ddl)
+    assert df.dtypes == [("k", "int"), ("id", "bigint"), ("v", "double"),
+                         ("s", "string"), ("f", "boolean"),
+                         ("xs", "array<double>")]
+    assert [tuple(r) for r in df.collect()] == rows
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = plan.strip().splitlines()
+    assert len(nodes) == 1 and nodes[0].startswith("LocalTableScan"), plan
+    empty = local_frame(spark, [], "k int, v double")
     assert empty.dtypes == [("k", "int"), ("v", "double")]
     assert empty.count() == 0
 

@@ -6,12 +6,7 @@ run. The driver-mimic (/tmp/drive_contract.py, see
 
 import pytest
 
-from tests.conftest import SF_SMOKE, assert_df_matches, oracle_df
-
-
-def _specs():
-    from recommendation_system_spark_ml_spark.registry import all_specs
-    return all_specs()
+from tests.conftest import SF_SMOKE, _specs, assert_df_matches, oracle_df
 
 
 @pytest.mark.parametrize("name", sorted(_specs().keys()))

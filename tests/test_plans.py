@@ -5,17 +5,7 @@ back to an unblocked cartesian product."""
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-
-
-def _specs():
-    from recommendation_system_spark_ml_spark.registry import all_specs
-    return all_specs()
+from tests.conftest import SF_SMOKE, _plan, _specs
 
 
 def test_parquet_scan_pushes_filter_and_prunes_columns(spark):

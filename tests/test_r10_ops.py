@@ -5,12 +5,7 @@ the fixture-conditional halves)."""
 
 import pyspark.sql.functions as F
 
-from recommendation_system_spark_ml_spark.registry import all_specs
-from tests.conftest import SF_SMOKE
-
-
-def _specs():
-    return all_specs()
+from tests.conftest import SF_SMOKE, _plan, _specs
 
 
 def test_lsh_band_bits_clamp_edges():
@@ -75,7 +70,7 @@ def test_cms_fold_keeps_product_in_int64(spark):
         knuth_hash, knuth_hash_sql)
     from recommendation_system_spark_ml_spark.operators.aggregates import (
         CM_DEPTH, CM_SALT)
-    from recommendation_system_spark_ml_spark.session import tiny_frame
+    from recommendation_system_spark_ml_spark.session import local_frame
 
     worst = (2 ** 31 - 1) * 2654435761
     assert worst < 2 ** 63 - 1
@@ -96,7 +91,7 @@ def test_cms_fold_keeps_product_in_int64(spark):
             4_000_000_000, 2 ** 62, -1, -12345]
     want = {k: ref(k) for k in keys}
     assert want[-12345][1] == -1  # a gate's % 10 truncates too
-    keys_df = tiny_frame(spark, [(k,) for k in keys], "k bigint")
+    keys_df = local_frame(spark, [(k,) for k in keys], "k bigint")
     h = knuth_hash(F.col("k"))
     got_spark = {r[0]: (r[1], r[2]) for r in keys_df.select(
         "k", h, h % 10).collect()}
@@ -144,9 +139,23 @@ def test_knuth_constant_lives_only_in_the_kernel():
     assert defs == ["hashing.py"]
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
+def test_driver_frames_have_one_builder():
+    """One path for driver-built frames: createDataFrame is called only
+    in session.py (local_frame), and neither the literal-struct builder
+    it replaced (tiny_frame) nor its F.inline( is left in the package
+    source."""
+    import pathlib
+
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "recommendation_system_spark_ml_spark")
+    calls, stale = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        calls += [rel] * text.count("createDataFrame(")
+        stale += [rel] * (text.count("tiny_frame") + text.count("F.inline("))
+    assert calls == ["session.py"]
+    assert stale == []
 
 
 def test_cms_merge_plans_bounded_and_partial(spark):

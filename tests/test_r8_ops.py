@@ -5,12 +5,7 @@ the hash cannot see)."""
 
 import pyspark.sql.functions as F
 
-from recommendation_system_spark_ml_spark.registry import all_specs
-from tests.conftest import SF_SMOKE
-
-
-def _specs():
-    return all_specs()
+from tests.conftest import SF_SMOKE, _specs
 
 
 def test_audio_frames_window_arithmetic(spark):

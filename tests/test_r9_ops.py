@@ -4,12 +4,7 @@ tests/test_oracle_parity.py)."""
 
 import pyspark.sql.functions as F
 
-from recommendation_system_spark_ml_spark.registry import all_specs
-from tests.conftest import SF_SMOKE
-
-
-def _specs():
-    return all_specs()
+from tests.conftest import SF_SMOKE, _specs
 
 
 def test_count_min_exact_one_sided_error_and_bounded_cells(spark):

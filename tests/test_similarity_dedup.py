@@ -3,9 +3,10 @@ fingerprint dedup must actually collapse the word-shuffled duplicates,
 simhash must be shuffle-invariant, and IVF must recall most of the
 exact top-k on the clustered testdata."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _plan, _specs
 from recommendation_system_spark_ml_spark.operators.dedup import (
     dedup_exact, dedup_fingerprint, dedup_minhash_pairs,
     dedup_simhash_fingerprints)
@@ -42,9 +43,9 @@ def test_band_pairs_core_dedups_orders_filters_and_carries(spark):
     id), never with itself; keys collide only within one band; keep
     drops a colliding pair that fails it; extra columns ride along."""
     from recommendation_system_spark_ml_spark.banding import band_pairs
-    from recommendation_system_spark_ml_spark.session import tiny_frame
+    from recommendation_system_spark_ml_spark.session import local_frame
 
-    buckets = tiny_frame(spark, [
+    buckets = local_frame(spark, [
         (2, 0, 10, 6), (1, 0, 10, 5), (1, 1, 20, 5), (2, 1, 20, 6),
         (3, 0, 10, 100), (3, 1, 99, 100),
         (4, 1, 10, 5),    # key 10 in band 1 meets no band-0 key 10
@@ -186,6 +187,14 @@ def test_pq_recall_vs_brute_force(spark):
     approx = {(r.query_id, r.neighbor_id)
               for r in sim_pq_topk(spark, sf).collect()}
     assert len(exact & approx) >= 0.75 * len(exact)
+
+
+@pytest.mark.parametrize("name", ["sim_ivf", "sim_pq", "vec_top_pc"])
+def test_driver_built_frames_plan_local_table_scans(spark, name):
+    """The IVF centroids, the PQ norm and LUT tables and the top-PC
+    result are computed on the driver and enter the plan as a
+    LocalTableScan (session.local_frame), not as a Python-RDD scan."""
+    assert "LocalTableScan" in _plan(_specs()[name].fn(spark, SF_SMOKE))
 
 
 def test_semantic_dedup_precision_and_recall(spark):
