@@ -157,24 +157,18 @@ def main() -> None:
                     samples[name].append(timed_sample(spec))
     times = {name: round(_median([dt for dt, _ in ts]), 3)
              for name, ts in samples.items()}
-    calib_all = calib_start + _calib_probe(spark)
-    all_probes = list(calib_all)
+    all_probes = calib_start + _calib_probe(spark)
     for ts in samples.values():
         all_probes += [p for _, p in ts]
     factor = round(REF_CALIB / _median(all_probes), 4)
     times_norm = {name: norm_time(t, factor) for name, t in times.items()}
-    times_min = {name: round(min(dt for dt, _ in ts), 3)
-                 for name, ts in samples.items()}
-    raw_samples = {name: [[round(dt, 3), round(p, 3)] for dt, p in ts]
-                   for name, ts in samples.items()}
 
     # Stdout contract: ONE COMPACT line. The driver keeps only the
     # last ~2000 chars of stdout (r8 lesson: inlining per-sample
     # pairs blew past that and BENCH_r08.json recorded parsed:null).
     # Scalars only beyond the per-query medians; queries_norm is
-    # derivable (norm_time(raw, norm_factor)); everything bulky goes
-    # to the BENCH_SAMPLES.json side artifact.
-    line = json.dumps({
+    # derivable (norm_time(raw, norm_factor)).
+    print(json.dumps({
         "metric": "bench_total",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
@@ -186,32 +180,7 @@ def main() -> None:
         "fixed_lat_sec": FIXED_LAT,
         "norm_factor": factor,
         "value_norm": round(sum(times_norm.values()), 3),
-    })
-    side = {
-        "sf": _sf_of(sf_dir),
-        "repeat": repeat,
-        "calib_all_sec": [round(x, 3) for x in calib_all],
-        "norm_factor": factor,
-        "queries_norm": times_norm,
-        "queries_min": times_min,
-        "samples": raw_samples,
-    }
-    # Side-artifact path is OUTPUT-SCOPED (r9 ADVICE): the committed
-    # repo-root BENCH_SAMPLES.json is the PINNED noise source for
-    # bench_drift_check.perf_noise() and must only be overwritten
-    # deliberately (set $SPARK_GRAFT_BENCH_SAMPLES when re-pinning a
-    # PERF sweep). Default writes go to the untracked *_last.json so
-    # smoke runs (tests/test_bench.py at sf0.001 repeat=1) can never
-    # clobber the pin; the sf/repeat stamps above let perf_noise()
-    # refuse a mismatched pin outright.
-    side_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_SAMPLES",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_SAMPLES_last.json"))
-    with open(side_path, "w") as f:
-        json.dump(side, f)
-    print(f"per-sample detail -> {side_path}", file=sys.stderr)
-    print(line)
+    }))
 
 
 # Reference machine speed: seconds for the fixed 200M-row CPU probe

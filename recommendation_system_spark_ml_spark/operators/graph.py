@@ -54,9 +54,11 @@ TOL = 1e-6            # early-exit threshold on max |delta(rank * n)|
 # iterative graph algorithm here joins the E-sized edge table against
 # a |V|-sized vector (ranks / labels / alive set). Under the default
 # sort-merge plan BOTH sides are re-exchanged and re-sorted EVERY
-# round (PLANS.md graph_pagerank: one Exchange+Sort of the
-# checkpointed edge RDD per iteration -- the dominant cost, since
-# E >> V). Broadcasting the vector side turns each round into
+# round (the plan before the gate, `git show
+# 364059f:plans/r10/graph_pagerank_before.txt`: one Exchange+Sort of
+# the checkpointed edge RDD per iteration -- the dominant cost, since
+# E >> V; LEDGER.json's graph_pagerank row now reads 0 SortMergeJoin).
+# Broadcasting the vector side turns each round into
 # BroadcastHashJoin(edges) + one partial-combined aggregation
 # exchange: the edge table is never shuffled again after its one
 # materialization. The gate keeps the plan scale-honest: vectors
@@ -669,8 +671,9 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins nothing downstream and never carries the mid column.
     # r11 (guide §5 + §3.1): adj feeds both sides of the wedge
     # self-join; the before-plan ran the whole und+orientation+window
-    # chain twice (plans/r11/graph_link_prediction_before.txt, nodes
-    # 16-34 and 50-68). One eager checkpoint materializes the capped
+    # chain twice (`git show
+    # 364059f:plans/r11/graph_link_prediction_before.txt`, nodes 16-34
+    # and 50-68). One eager checkpoint materializes the capped
     # oriented adjacency (<= LP_MID_CAP rows per middle) once. The
     # wedge join then takes the SHUFFLE_HASH hint (the
     # graph_triangle_count lever): the CAP*E-sized wedge stream is

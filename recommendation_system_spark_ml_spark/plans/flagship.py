@@ -129,7 +129,8 @@ def flagship_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship's algebraic fusion: per-group RMSE-deviation from
     the group mean IS the population stddev, so the join-back collapses
     into the first aggregation -- ONE fact scan and ONE shuffle instead
-    of three scans and two shuffles (compare PLANS.md). Same output as
+    of three scans and two shuffles (compare the two queries' Exchange
+    counts in LEDGER.json). Same output as
     flagship_cluster_avg; at 100 TB this rewrite is the difference
     between touching the fact table once and three times. The unfused
     twin is kept because the join-back *shape* is the reference's M7

@@ -93,11 +93,12 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     # AQE coalesces DataFrame shuffles either way, but MLlib's RDD paths
     # (ALS, KMeans) and streaming state stores don't get AQE -- 200 tiny
     # partitions there is pure scheduling overhead. On a real cluster
-    # set SPARK_GRAFT_SHUFFLE_PARTITIONS to ~2-3x total cores.
+    # set SPARK_GRAFT_SHUFFLE_PARTITIONS to ~2-3x total cores. The
+    # default follows the session's own cores, as in ``get_spark``.
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                       str(max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8))))
+                       str(max(spark.sparkContext.defaultParallelism, 8))))
     return spark
 
 

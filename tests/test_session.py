@@ -1,4 +1,4 @@
-"""Session factory defaults that need no JVM."""
+"""Session factory and session-conf defaults."""
 
 import os
 
@@ -56,3 +56,19 @@ def test_scratch_dir_is_removed_at_exit():
     assert path == os.path.join(pid_dir, "sf0.01", "a")
     assert os.path.basename(pid_dir).startswith("pid")
     assert not os.path.exists(pid_dir)
+
+
+def test_pin_session_conf_sizes_partitions_to_the_session(spark, monkeypatch):
+    """Without an override, shuffle partitions follow the session it is
+    given (``max(defaultParallelism, 8)``, as ``get_spark`` sets them),
+    not $SPARK_GRAFT_CPUS or its default of 32."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        session.pin_session_conf(spark)
+        want = max(spark.sparkContext.defaultParallelism, 8)
+        assert spark.conf.get(key) == str(want)
+    finally:
+        spark.conf.set(key, old)

@@ -199,7 +199,7 @@ def main() -> None:
            "component above the fixed scheduler/sink latency is rescaled",
            "(a pure linear factor over-corrects sub-second queries; see",
            "bench.norm_time). Cross-artifact comparisons (BENCH_rN vs this",
-           "file) use `norm` via tools/bench_drift_check.py;",
+           "file) use `norm`; regressions are gated on LEDGER.json's counters;",
            f"this run: bench subprocess calib_sec={bench_calib}, in-process",
            f"sweep calib_sec={round(sweep_calib, 3)}, REF_CALIB={REF_CALIB}.",
            "",
